@@ -515,11 +515,10 @@ def draw_ops(positioned: DataFrame, id_col: str, title_col: Column | None = None
     Everything stays per-case relational rows — the sink only ever sees
     a sorted partition, never a collected document.
 
-    ``positioned`` is persisted here: five union branches plus the dims
-    aggregate would otherwise re-run the scenario parse + layout fold
-    ~6× per action. Caller owns the storage (one-shot sinks can leave
-    eviction to the LRU; long-lived pipelines should unpersist)."""
-    positioned = positioned.persist()
+    ``positioned`` is read by five union branches plus the dims
+    aggregate, so a caller whose input is expensive to recompute
+    materialises it first (the CLI passes rows of its checkpointed case
+    records); nothing is persisted here."""
     dims = positioned.groupBy(id_col).agg(
         F.max("total_h").cast("long").alias("total_h"),
         (

@@ -7,31 +7,38 @@ Mirrors ``/root/reference/src/run.py`` (usage at :4-13, arg parsing
     python -m shippai_knowledge_etl_spark.run URL [URL...] \
         [--limit N] [--output-dir DIR] [--pdf]
 
-Routing (src/run.py:66-77): ``/lis/`` list pages are expanded by
-fetching and parsing their ``ul.list_all`` anchor list (S2,
-src/extract.py:396-407) with ``--limit`` case links kept per list;
-``/cf/`` URLs are direct case pages; anything else warns and is
-skipped. An empty worklist exits 1 (src/run.py:79-81).
+Routing (src/run.py:66-77) runs on the driver over argv: ``/lis/``
+list pages are expanded by fetching and parsing their ``ul.list_all``
+anchor list (S2, src/extract.py:396-407) with ``--limit`` case links
+kept per list; ``/cf/`` URLs are direct case pages; anything else warns
+and is skipped. The manifest keeps argv order, each list's cases in its
+argv slot. An empty worklist exits 1 (src/run.py:79-81).
 
 Where the reference loops sequentially with 30 s timeouts per fetch,
-the worklist here is a DataFrame: fetches fan out partition-parallel
-(errors are data, never task failures), the parse edges are
-Arrow-batched HTML UDFs — ONE parse per page via a Generate barrier —
-and everything downstream is column expressions: the scenario sub-page
-(S3) is fetched per case and decoded Spark-side (F19 separator decode →
-O1 ordinal sort → W2 boundary slice → W1 chunk-by-3), multimedia links
-are merged and order-preserving-deduped (P7/J3/O3), dates normalize via
+the worklist here is a DataFrame and the fetches fan out
+partition-parallel (errors are data, never task failures). Each page
+kind crosses into Python ONCE: ``fetch_parsed`` fetches and parses the
+page in one Arrow-batched UDF, pinned to one call per row by a Generate
+barrier — one stage for all list pages (behind one eager checkpoint),
+then two per case (case page, scenario page). Everything downstream is
+column expressions: the scenario sub-page (S3) is decoded Spark-side
+(F19 separator decode → O1 ordinal sort → W2 boundary slice → W1
+chunk-by-3), multimedia links are merged and order-preserving-deduped
+(P7/J3/O3), dates normalize via
 F1, casualty counts via F2, knowledge via the F6 fold, and validation /
 status partitioning is the same column logic the driver-verified
 queries use (P10/U2/A1).
 
-Artifacts match the reference's contract: one full NESTED case record
-per success as ``{case_id}_{case_name}.json`` (requirements.md:107-142,
+The case records are materialised once (an eager local checkpoint);
+the sinks plan against that flat relation. Artifacts match the
+reference's contract: one full NESTED case record per success as
+``{case_id}_{case_name}.json`` (requirements.md:107-142,
 src/extract.py:417), a ``results_NNN.json`` run manifest with per-case
 entries + summary (src/run.py:122-146) written with the entries
 STREAMED from a distributed Spark write (no per-case driver collect),
 and optionally one PDF per success via the dependency-free emitter
-(``--pdf``).
+(``--pdf``). ``main`` releases both checkpoints before it returns, so a
+crawl leaves no persisted state in a long-lived session.
 """
 
 from __future__ import annotations
@@ -43,15 +50,19 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from shippai_knowledge_etl_spark.functions import listparse, nested, scalar
 from shippai_knowledge_etl_spark.operators import quality
 from shippai_knowledge_etl_spark.sources import sinks
-from shippai_knowledge_etl_spark.sources.fetch import fetch_html, fetched_pages
+from shippai_knowledge_etl_spark.sources.fetch import fetch_parsed
 from shippai_knowledge_etl_spark.sources.html_parse import (
-    case_page_facets,
-    list_page_links,
-    scenario_page_facts,
+    CASE_PAGE_SCHEMA,
+    LINKS_TYPE,
+    SCENARIO_PAGE_SCHEMA,
+    parse_case_page,
+    parse_list_page,
+    parse_scenario_page,
 )
 
 # src/extract.py:14-20 — HTML label → JSON key for required fields
@@ -86,79 +97,103 @@ _PARA_FIELDS = {
 }
 
 
+def _list_links(html: str) -> dict:
+    return {"links": parse_list_page(html)}
+
+
+_fetch_list_page = fetch_parsed(
+    _list_links, T.StructType([T.StructField("links", LINKS_TYPE)])
+)
+_fetch_case_page = fetch_parsed(parse_case_page, CASE_PAGE_SCHEMA)
+_fetch_scenario_page = fetch_parsed(parse_scenario_page, SCENARIO_PAGE_SCHEMA)
+
+
 def expand_worklist(
     spark: SparkSession, urls: list[str], limit: int | None
 ) -> DataFrame:
-    """argv URLs → one row per case URL (``case_url`` + input-order
-    ``seq``, so the manifest lists cases in worklist order like the
-    reference's sequential loop)."""
-    routed = spark.createDataFrame(
-        [(u,) for u in urls], "url string"
-    ).select(
-        "url",
-        F.when(F.col("url").contains("/lis/"), "list")
-        .when(F.col("url").contains("/cf/"), "case")
-        .otherwise("skip")
-        .alias("route"),
-    )
-    # warning collects are capped at 100 rows so a pathological
-    # worklist (e.g. fed from a file) can never balloon the driver;
-    # the count() reports the full tally either way
-    skipped = routed.filter(F.col("route") == "skip")
-    n_skip = skipped.count()
-    for r in skipped.limit(100).collect():
-        print(f"warning: unrecognized URL pattern, skipping: {r.url}",
-              file=sys.stderr)
-    if n_skip > 100:
-        print(f"warning: ... and {n_skip - 100} more unrecognized URLs",
-              file=sys.stderr)
+    """argv URLs → one row per case URL: ``case_url`` plus ``seq``, the
+    (argv position, link index) pair the manifest is ordered by. That
+    is the reference's ``extend``/``append`` loop order
+    (src/run.py:66-77): each list's cases sit in its argv slot, in link
+    order, and a direct ``/cf/`` URL in its own slot.
 
-    direct = routed.filter(F.col("route") == "case").select(
-        F.col("url").alias("case_url")
-    )
-    lists = routed.filter(F.col("route") == "list")
-    if lists.isEmpty():
-        return direct.withColumn("seq", F.monotonically_increasing_id())
+    Routing and the skip warnings run on the driver. All list pages are
+    fetched, parsed and exploded in one Python stage behind ONE eager
+    checkpoint, so the case pipeline never re-triggers a list fetch
+    through lineage; the failed-list warnings are read back from the
+    checkpointed rows. The caller releases the checkpoint
+    (``drop_checkpoints``)."""
+    # P6 routing (src/run.py:66-77) in Python: argv is a driver list.
+    # The column form of the predicate stays covered by the catalog
+    # queries (queries/nested.py, queries/combined.py).
+    direct, lists = [], []
+    for pos, url in enumerate(urls):
+        if "/lis/" in url:
+            lists.append((pos, url))
+        elif "/cf/" in url:
+            direct.append((pos, 0, url))
+        else:
+            print(f"warning: unrecognized URL pattern, skipping: {url}",
+                  file=sys.stderr)
+    worklist = spark.createDataFrame(direct, "arg int, link int, case_url string")
+    if lists:
+        expanded = _expand_lists(spark, lists, limit).localCheckpoint(eager=True)
+        # a failed list fetch must be LOUD, not an empty expansion
+        # (reference surfaces list-expansion failures, src/run.py:66-77);
+        # at most one row per argv list URL reaches the driver
+        for r in expanded.filter(F.col("fetch_error").isNotNull()).collect():
+            print(
+                f"warning: list page fetch failed ({r.fetch_error}), "
+                f"0 cases expanded: {r.url}",
+                file=sys.stderr,
+            )
+        worklist = worklist.unionByName(
+            expanded.filter(F.col("link").isNotNull()).select(
+                "arg", "link", "case_url"
+            )
+        )
+    return worklist.select(F.struct("arg", "link").alias("seq"), "case_url")
 
+
+def _expand_lists(
+    spark: SparkSession, lists: list[tuple[int, str]], limit: int | None
+) -> DataFrame:
+    """(argv position, list URL) → (arg, url, fetch_error, link,
+    case_url) rows, one per ``/cf/`` anchor of the page's
+    ``ul.list_all`` (S2, src/extract.py:396-407), at most ``limit`` per
+    list. posexplode_outer keeps one null-link row for a list that
+    failed or has no case links, so its fetch error stays readable."""
     links = F.filter(
-        list_page_links(F.col("page.body")),
-        lambda r: r.getField("href").contains("/cf/"),
+        F.col("__l.links"), lambda r: r.getField("href").contains("/cf/")
     )
     if limit is not None:
         links = F.slice(links, 1, limit)
-    fetched = lists.select(
-        "url", fetched_pages(F.col("url")).alias("page")
-    ).cache()
-    # a failed list fetch must be LOUD, not an empty expansion: the
-    # explode over [] below would silently drop the whole list page
-    # (reference surfaces list-expansion failures, src/run.py:66-77)
-    failed = fetched.filter(F.col("page.error").isNotNull())
-    n_failed = failed.count()
-    for r in failed.limit(100).collect():
-        print(
-            f"warning: list page fetch failed ({r.page.error}), "
-            f"0 cases expanded: {r.url}",
-            file=sys.stderr,
+    return (
+        spark.createDataFrame(lists, "arg int, url string")
+        .select(
+            "arg", "url",
+            F.explode(F.array(_fetch_list_page(F.col("url")))).alias("__l"),
         )
-    if n_failed > 100:
-        print(f"warning: ... and {n_failed - 100} more failed list fetches",
-              file=sys.stderr)
-    expanded = (
-        fetched.select("url", F.explode(links).alias("r"))
-        .select(scalar.resolve_url(F.col("url"), F.col("r.href")).alias("case_url"))
+        .select(
+            "arg", "url", F.col("__l.fetch_error").alias("fetch_error"),
+            F.posexplode_outer(links).alias("link", "r"),
+        )
+        .select(
+            "arg", "url", "fetch_error", "link",
+            scalar.resolve_url(F.col("url"), F.col("r.href")).alias("case_url"),
+        )
     )
-    # the worklist is small (list-page anchors) — checkpoint it eagerly
-    # so (a) downstream actions (isEmpty + the case pipeline) never
-    # re-trigger the list-page HTTP fetch through lineage, and (b) the
-    # cached page BODIES can be released now instead of pinning
-    # executor memory for the whole run
-    out = (
-        direct.unionByName(expanded)
-        .withColumn("seq", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-    fetched.unpersist()
-    return out
+
+
+def drop_checkpoints(df: DataFrame) -> None:
+    """Release the local checkpoints ``df`` reads. ``unpersist()`` does
+    not: a local checkpoint is no CacheManager entry but the persisted
+    RDD under a ``LogicalRDD`` leaf of the plan."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def _first_val(rows: F.Column, label: str) -> F.Column:
@@ -207,20 +242,13 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
     throws: fetch failures → status 'error', missing required fields →
     'excluded'). Column order of the produced record follows the output
     contract (requirements.md:107-142)."""
-    page = cases_urls.select(
+    # one Python stage per page: the fetch and the parse are fused
+    # (fetch_parsed), and the Generate barrier pins ONE call per row
+    parsed = cases_urls.select(
         "seq",
         F.col("case_url"),
         scalar.case_id_from_url(F.col("case_url")).alias("case_id"),
-        fetched_pages(F.col("case_url")).alias("page"),
-    )
-    # Generate barrier: ONE parse per page (same pattern as
-    # run_pipeline_e2e); fetch errors carry through as null body
-    parsed = page.select(
-        "seq",
-        "case_url",
-        "case_id",
-        F.col("page.error").alias("fetch_error"),
-        F.explode(F.array(case_page_facets(F.col("page.body")))).alias("__p"),
+        F.explode(F.array(_fetch_case_page(F.col("case_url")))).alias("__p"),
     )
 
     rows = F.filter(
@@ -229,8 +257,9 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
     )
 
     # scenario sub-page: labeled-row link first, page-wide /sf/ anchor
-    # as fallback (O4 first-match, src/extract.py:197-210); fetch is the
-    # S3 edge, then a second Generate barrier pins one scenario parse
+    # as fallback (O4 first-match, src/extract.py:197-210); the S3
+    # fetch+parse is the second Python stage. No link → null URL → no
+    # request, an empty scenario and a null fetch_error
     scen_href = F.coalesce(
         F.col("__p.scenario_row_href"), F.col("__p.sf_href")
     )
@@ -239,15 +268,9 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
         scalar.resolve_url(F.col("case_url"), scen_href),
     )
     staged = parsed.select(
-        "seq", "case_url", "case_id", "fetch_error", "__p",
+        "seq", "case_url", "case_id", "__p",
         rows.alias("__rows"),
-        scen_href.alias("__scen_href"),
-        fetch_html(scen_url).alias("__scen_page"),
-    ).select(
-        "*",
-        F.explode(
-            F.array(scenario_page_facts(F.col("__scen_page.body")))
-        ).alias("__s"),
+        F.explode(F.array(_fetch_scenario_page(scen_url))).alias("__s"),
     )
 
     # multimedia: labeled-row links ++ page-wide /mf/ scan, first-
@@ -300,14 +323,11 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
     # a present-but-failed scenario fetch aborts the case like the
     # reference's raise_for_status inside parse_scenario_page
     # (src/extract.py:284-286 → run.py:113-120 generic error)
-    scen_error = F.when(
-        F.col("__scen_href").isNotNull(), F.col("__scen_page.error")
-    )
     wide = staged.select(
         "seq",
         F.col("case_url"),
-        F.col("fetch_error"),
-        scen_error.alias("scen_error"),
+        F.col("__p.fetch_error").alias("fetch_error"),
+        F.col("__s.fetch_error").alias("scen_error"),
         *[named[c].alias(c) for c in record_order],
     )
 
@@ -567,16 +587,29 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("shippai-etl-run")
     worklist = expand_worklist(spark, args.urls, args.limit)
-    if worklist.isEmpty():  # src/run.py:79-81
-        print("error: empty worklist", file=sys.stderr)
-        return 1
+    try:
+        if worklist.isEmpty():  # src/run.py:79-81
+            print("error: empty worklist", file=sys.stderr)
+            return 1
+        # the records are materialised ONCE: every sink below plans
+        # against this flat relation, not the fetch/parse lineage
+        records = process_cases(worklist).localCheckpoint(eager=True)
+    finally:
+        drop_checkpoints(worklist)
+    try:
+        path = _write_outputs(records, args.output_dir, args.pdf)
+    finally:
+        drop_checkpoints(records)
+    print(f"manifest: {path}")
+    return 0
 
-    records = process_cases(worklist).cache()
+
+def _write_outputs(records: DataFrame, out: str, pdf: bool) -> str:
+    """JSON records, optional PDFs and the run manifest; returns the
+    manifest path."""
     successes = records.filter(F.col("status") == quality.STATUS_SUCCESS)
-
-    out = args.output_dir
     sinks.write_cases_json_named(successes.select(*RECORD_COLUMNS), out)
-    if args.pdf:
+    if pdf:
         _render_pdfs(successes, out)
 
     # manifest: per-case entries with status-dependent payloads +
@@ -586,7 +619,7 @@ def main(argv: list[str] | None = None) -> int:
     json_name = scalar.output_filename(
         F.col("case_id"), F.col("case_name"), "json"
     )
-    if args.pdf:
+    if pdf:
         outputs = F.array(json_name, F.concat(F.col("case_id"), F.lit(".pdf")))
     else:
         outputs = F.array(json_name)
@@ -613,9 +646,7 @@ def main(argv: list[str] | None = None) -> int:
         summary, sinks.iter_json_parts(tmp), out
     )
     shutil.rmtree(tmp, ignore_errors=True)
-    print(f"manifest: {path}")
-    records.unpersist()
-    return 0
+    return path
 
 
 if __name__ == "__main__":

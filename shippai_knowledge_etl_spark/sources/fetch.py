@@ -6,6 +6,11 @@ iterator-form pandas UDF: one HTTP session per Python worker (connection
 reuse across Arrow batches), rows fetched within a partition, failures
 returned as null/status columns — never task failures (errors-are-data).
 
+``fetch_parsed`` fuses a page fetch with its parse: the CLI's list,
+case and scenario pages each cross into Python once, and the page body
+stays inside the worker instead of making an Arrow round trip through
+the JVM between the fetch and the parse stage.
+
 Partition-parallel fan-out replaces the reference's sequential loop: at
 1000 executors the worklist shards naturally; rate limits are applied
 per-partition (sleep between requests) so cluster-wide QPS =
@@ -17,7 +22,7 @@ live-network use is smoke-only (SURVEY §7.4 item 6).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column
@@ -89,3 +94,38 @@ def fetch_binary(urls: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 
 def fetched_pages(url_col: Column) -> Column:
     return fetch_html(url_col)
+
+
+def fetch_parsed(
+    parse_fn: Callable[[str], dict], schema: T.StructType
+) -> Callable[[Column], Column]:
+    """S1/S3 fused with a page parser: URL → ``parse_fn(body)`` fields
+    plus a ``fetch_error`` string, in ONE Python stage.
+
+    ``parse_fn`` maps page text to a dict keyed by ``schema``'s fields
+    (``html_parse.parse_case_page``, ``parse_scenario_page``). A failed
+    or null fetch yields the parse of an empty page, so a fetch error
+    reads as an empty page plus its message and a null URL (nothing to
+    fetch) as an empty page with a null ``fetch_error`` and no request.
+    Errors are data, as in ``fetch_html``."""
+    out = T.StructType(
+        [*schema.fields, T.StructField("fetch_error", T.StringType())]
+    )
+    cols = [f.name for f in out.fields]
+
+    @pandas_udf(out)
+    def fetch_and_parse(urls: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        import urllib.request
+
+        opener = urllib.request.build_opener()
+        blank = parse_fn("")
+        for batch in urls:
+            rows = []
+            for u in batch:
+                body, _, error = _fetch_one(opener, u, binary=False)
+                rows.append(
+                    {**(parse_fn(body) if body else blank), "fetch_error": error}
+                )
+            yield pd.DataFrame(rows, columns=cols)
+
+    return fetch_and_parse

@@ -78,6 +78,16 @@ CASE_MISSING = """
 </table></html>
 """
 
+# scenario link present but the sub-page 404s → status error
+CASE_SCEN_404 = CASE_MISSING.replace("SA0000001", "SA0000404")
+# no scenario link anywhere on the page → no scenario request at all
+CASE_NO_SCEN = """
+<html><table>
+<tr><td bgcolor="#DFE9F2">事例名称</td><td>no scenario</td></tr>
+<tr><td bgcolor="#DFE9F2">事例概要</td><td>summary</td></tr>
+</table></html>
+"""
+
 LIST_PAGE = """
 <html>
 <ul class="other"><li><a href="/cf/DECOY.html">decoy</a></li></ul>
@@ -99,12 +109,18 @@ TINY_JPEG = (
 )
 
 
+REQUESTS: list[str] = []  # every path the site was asked for, in order
+
+
 class _Site(BaseHTTPRequestHandler):
     def do_GET(self):
+        REQUESTS.append(self.path)
         pages = {
             "/fkd/lis/lis1.html": LIST_PAGE,
             "/fkd/cf/CA0000001.html": CASE_OK,
             "/fkd/cf/CA0000002.html": CASE_MISSING,
+            "/fkd/cf/CA0000005.html": CASE_SCEN_404,
+            "/fkd/cf/CA0000006.html": CASE_NO_SCEN,
             "/fkd/sf/SA0000001.html": SCENARIO_PAGE,
         }
         images = {
@@ -252,6 +268,11 @@ def test_cli_end_to_end(spark, site, tmp_path):
         "total": 3, "n_success": 1, "n_excluded": 1, "n_error": 1,
     }
     assert not (out / ".manifest_entries").exists()  # temp dir cleaned
+    # argv order (reference extend/append loop, src/run.py:66-77): the
+    # list's cases in its argv slot in link order, then the direct URL
+    assert [c["url"].rsplit("/", 1)[-1] for c in manifest["cases"]] == [
+        "CA0000001.html", "CA0000002.html", "CA0000404.html",
+    ]
     by_url = {c["url"].rsplit("/", 1)[-1]: c for c in manifest["cases"]}
     ok = by_url["CA0000001.html"]
     assert ok["case_id"] == "CA0000001"
@@ -277,3 +298,73 @@ def test_cli_empty_worklist_exits_1(spark, tmp_path):
 
     assert main(["http://x/unknown/route.html",
                  "--output-dir", str(tmp_path)]) == 1
+
+
+@pytest.mark.slow
+def test_cli_leaves_no_persisted_state(spark, site, tmp_path):
+    """main releases the worklist and case-record checkpoints it makes,
+    and the diagram path persists nothing."""
+    from shippai_knowledge_etl_spark.run import main
+
+    def n_persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persisted()
+    rc = main([f"{site}/lis/lis1.html", f"{site}/cf/CA0000002.html",
+               "--output-dir", str(tmp_path), "--pdf"])
+    assert rc == 0
+    assert n_persisted() == before
+
+
+def test_failed_list_page_warns_and_expands_to_nothing(spark, site, capsys):
+    from shippai_knowledge_etl_spark.run import drop_checkpoints, expand_worklist
+
+    url = f"{site}/lis/missing.html"
+    worklist = expand_worklist(spark, [url], None)
+    try:
+        assert worklist.count() == 0
+    finally:
+        drop_checkpoints(worklist)
+    err = capsys.readouterr().err
+    assert f"list page fetch failed (http 404), 0 cases expanded: {url}" in err
+
+
+def _records(spark, urls: list[str]) -> dict[str, dict]:
+    from shippai_knowledge_etl_spark.run import (
+        drop_checkpoints, expand_worklist, process_cases)
+
+    worklist = expand_worklist(spark, urls, None)
+    try:
+        rows = process_cases(worklist).collect()
+    finally:
+        drop_checkpoints(worklist)
+    return {r.case_id: r.asDict() for r in rows}
+
+
+def test_scenario_fetch_failure_is_a_case_error(spark, site):
+    rec = _records(spark, [f"{site}/cf/CA0000005.html"])["CA0000005"]
+    assert rec["status"] == "error"
+    assert rec["fetch_error"] is None
+    assert rec["scen_error"] == "http 404"
+
+
+def test_case_without_scenario_link_sends_no_scenario_request(spark, site):
+    REQUESTS.clear()
+    rec = _records(spark, [f"{site}/cf/CA0000006.html"])["CA0000006"]
+    assert REQUESTS == ["/fkd/cf/CA0000006.html"]
+    assert rec["scen_error"] is None
+    assert rec["status"] == "excluded"  # シナリオ missing, not an error
+
+
+def test_one_python_stage_per_fetched_page(spark, site):
+    """The fetch and the parse of a page share one ArrowEvalPython:
+    two per case (case page, scenario page), one for the list pages."""
+    from shippai_knowledge_etl_spark import run
+
+    def n_python(df) -> int:
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "ArrowEvalPython")
+
+    assert n_python(run._expand_lists(spark, [(0, f"{site}/lis/lis1.html")], 2)) == 1
+    worklist = run.expand_worklist(spark, [f"{site}/cf/CA0000001.html"], None)
+    assert n_python(run.process_cases(worklist)) == 2
