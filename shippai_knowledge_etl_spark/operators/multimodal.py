@@ -1,33 +1,183 @@
 """Multimodal (binary) column plumbing (SURVEY.md §2.11 [EXT]; S4).
 
-Images/audio/video are opaque ``binary`` columns plus typed metadata
-structs; decode / feature-extract / frame-sample run as Arrow-batched
-``mapInPandas`` UDFs. The decode libraries (PIL / torchaudio / ffmpeg)
-are NOT in this container, so most decode steps are STUBBED: when the
-library import fails we fall back to a deterministic fake decoder so
-the Spark-side plumbing — schema, batching, partitioning, UDF
-signature — is real and tested end-to-end. The real-decode branch
-raises NotImplementedError loudly rather than silently faking — with
-ONE real exception since round 9: PNG payloads decode for real via
-the pure-stdlib codec in ``png_codec.py`` (zlib inflate + all five
-RFC 2083 scanline filters), no Pillow required.
+Images, audio, video, archives and documents are opaque ``binary``
+columns. Every operator here crosses the Arrow boundary through one
+per-row map, :func:`_row_map`: it selects the input columns, calls a
+Python function once per row and emits the 0, 1 or many output tuples
+that function returns, named by the output schema string. Three kinds
+of operator sit on it — the ``attach_*`` payload synthesizers (one
+generated row per id, :func:`_attach`), the decoders (one feature row
+per payload, :func:`_decode_map`) and the row-exploding
+``sample_frames`` / ``audio_energy_frames``.
 
-Reference analog: ``download_image`` returning None on failure
-(src/render_pdf.py:90-98) — failure tolerance as nullable columns.
+Row contract of every decoder (reference analog: ``download_image``
+returning None on failure, src/render_pdf.py:90-98):
+
+- errors are data: a payload the codec cannot parse gives exactly one
+  row with ``ok=false`` and every feature column NULL, never a task
+  failure;
+- a NULL payload gives the same ``ok=false`` row;
+- a missing codec is loud: ``NotImplementedError`` (an out-of-scope
+  mode of a real codec, or the non-PNG real image path) fails the task
+  rather than silently faking.
+
+The codecs are pure-stdlib implementations (``*_codec.py``,
+``sources/pdf_reader.py``). PIL / soundfile are NOT in this container,
+so four operators keep a deterministic fake decode in front of real
+math — ``decode_image_features`` (unless ``use_real_decoder``, which
+decodes PNG for real), ``decode_audio_features``, ``resize_images``
+and ``ahash_signatures``; they accept any bytes by design.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shippai_knowledge_etl_spark.operators.avi_codec import (
+    decode_avi,
+    decode_avi_mjpeg,
+    encode_avi_mjpeg,
+    encode_avi_rgb24,
+)
+from shippai_knowledge_etl_spark.operators.bmp_codec import (
+    decode_bmp,
+    encode_bmp_rgb24,
+    encode_bmp_rle8,
+)
+from shippai_knowledge_etl_spark.operators.gif_codec import decode_gif, encode_gif
+from shippai_knowledge_etl_spark.operators.jpeg_codec import (
+    ZIGZAG,
+    decode_jpeg,
+    encode_jpeg,
+    encode_jpeg_progressive,
+    flat_block,
+)
+from shippai_knowledge_etl_spark.operators.png_codec import (
+    PNG_MAGIC,
+    decode_png,
+    decode_png16,
+    encode_png,
+    encode_png16,
+)
+from shippai_knowledge_etl_spark.operators.tar_codec import decode_tar, encode_tar
+from shippai_knowledge_etl_spark.operators.tiff_codec import decode_tiff, encode_tiff
+from shippai_knowledge_etl_spark.operators.warc_codec import (
+    decode_warc_auto,
+    encode_warc,
+    encode_warc_gzip,
+    http_response,
+)
+from shippai_knowledge_etl_spark.operators.wav_codec import (
+    decode_wav,
+    decode_wav_ima,
+    encode_wav,
+    encode_wav_alaw,
+    encode_wav_ima,
+    encode_wav_mulaw,
+)
+from shippai_knowledge_etl_spark.operators.zip_codec import decode_zip, encode_zip
+from shippai_knowledge_etl_spark.sources.pdf_reader import extract_pdf_text
+from shippai_knowledge_etl_spark.sources.pdf_writer import pdf_document
 from shippai_knowledge_etl_spark.tables import scale_out
 
 if TYPE_CHECKING:
     import pandas as pd
+
+PAYLOAD_SCHEMA = "doc_id long, payload binary"
+
+
+def _row_map(
+    df: DataFrame, in_cols: list[str], schema: str, fn: Callable
+) -> DataFrame:
+    """The module's one Arrow crossing: a narrow per-row map. ``fn``
+    gets one input row's values (``in_cols`` order) and returns a list
+    of output tuples; column names come from ``schema``, a flat
+    ``name type, ...`` list."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in it:
+            rows = [
+                out
+                for vals in zip(*(pdf[c] for c in in_cols))
+                for out in fn(*vals)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*in_cols).mapInPandas(batches, schema)
+
+
+def _ids(df: DataFrame, id_col: str) -> DataFrame:
+    return scale_out(df.select(F.col(id_col).alias("doc_id")))
+
+
+def _attach(
+    df: DataFrame,
+    id_col: str,
+    make: Callable[[int], object],
+    schema: str = PAYLOAD_SCHEMA,
+) -> DataFrame:
+    """Payload synthesizer: one ``(doc_id, make(doc_id))`` row per id."""
+    return _row_map(
+        _ids(df, id_col), ["doc_id"], schema, lambda d: [(int(d), make(int(d)))]
+    )
+
+
+def _decode_map(
+    df: DataFrame,
+    schema: str,
+    fn: Callable,
+    payload_cols: tuple[str, ...] = ("payload",),
+) -> DataFrame:
+    """Decoder shell: ``fn(doc_id, *payload_bytes)`` returns only the
+    feature values; this adds ``doc_id`` and ``ok`` and applies the
+    module's row contract (see the module docstring)."""
+    k = len(schema.split(",")) - 2
+
+    def row(doc_id, *payloads):
+        i = int(doc_id)
+        try:
+            return [(i, *fn(i, *map(bytes, payloads)), True)]
+        except NotImplementedError:
+            raise
+        except Exception:
+            return [(i,) + (None,) * k + (False,)]
+
+    return _row_map(df, ["doc_id", *payload_cols], schema, row)
+
+
+def _lcg_pcm16(i: int, n: int) -> list[int]:
+    """The Knuth-hash LCG 16-bit sample stream of the WAV surrogates:
+    sample k = ((id·2654435761 + k·40503) mod 65536) − 32768."""
+    return [((i * 2654435761 + k * 40503) % 65536) - 32768 for k in range(n)]
+
+
+def _u8(pix: bytes) -> np.ndarray:
+    return np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
+
+
+def _weighted_sums(a: np.ndarray, h: int, w: int, nc: int = 1) -> tuple[int, int]:
+    """(Σ v, Σ v·(x + 2y + 1)) over an int64 pixel array laid out
+    (h, w, nc), channels summed. The position weight is what a block or
+    strip decoded into the wrong place cannot fake."""
+    plane = a.reshape(h, w, nc).sum(axis=2)
+    wgt = (
+        np.arange(w, dtype=np.int64)[None, :]
+        + 2 * np.arange(h, dtype=np.int64)[:, None]
+        + 1
+    )
+    return int(plane.sum()), int((plane * wgt).sum())
+
 
 FEATURE_SCHEMA = (
     "doc_id long, byte_len long, width int, height int, channels int, ok boolean"
@@ -58,61 +208,43 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return (n % 640 + 16, (n // 640) % 480 + 16, 3)
 
 
+def _fake_grid(raw: bytes) -> tuple[int, int, np.ndarray]:
+    """Fake decode to pixels: the payload tiled/truncated into an h×w
+    single-channel grid of the :func:`_fake_decode` dimensions. An
+    empty payload decodes to the 16×16 zero grid, so ok stays true."""
+    w, h, _ = _fake_decode(raw)
+    if not raw:
+        return w, h, np.zeros((h, w), dtype=np.uint8)
+    tiled = (raw * ((w * h) // len(raw) + 1))[: w * h]
+    return w, h, np.frombuffer(tiled, dtype=np.uint8).reshape(h, w)
+
+
+def _nearest(grid: np.ndarray, tw: int, th: int) -> np.ndarray:
+    """REAL nearest-neighbor resample (vectorized index gather)."""
+    h, w = grid.shape
+    yi = (np.arange(th) * h) // th
+    xi = (np.arange(tw) * w) // tw
+    return grid[yi][:, xi]
+
+
 def decode_image_features(df: DataFrame, use_real_decoder: bool = False) -> DataFrame:
-    """Image decode → feature columns via Arrow-batched mapInPandas.
+    """Image decode → byte length and (w, h, c). The default is the
+    byte-length fake; ``use_real_decoder`` decodes PNG payloads for real
+    with the stdlib codec (round 9) and raises NotImplementedError for
+    every other format, which needs codec libraries absent here."""
 
-    Batch shape: one pandas DataFrame per Arrow batch; output rows are
-    independent per input row (narrow map — scales linearly). Failures
-    become ok=false rows, never task failures (errors-are-data rule).
-    """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            PNG_MAGIC,
-            decode_png,
-        )
-
-        def real_decode(payload: bytes) -> tuple[int, int, int]:
-            # REAL path (round 9): PNG decodes with the pure-stdlib
-            # codec — no Pillow needed; every other format keeps the
-            # loud-raise posture (JPEG/WebP genuinely need codec libs
-            # absent from this container).
-            if payload.startswith(PNG_MAGIC):
-                w, h, c, _pixels = decode_png(payload)
-                return w, h, c
-            try:
-                from PIL import Image  # noqa: F401
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real decode of non-PNG images needs Pillow, which is "
-                    "not in this container; PNG payloads decode via the "
-                    "stdlib codec, others need use_real_decoder=False"
-                ) from e
-            raise NotImplementedError("non-PNG real decode not wired yet")
-
-        for pdf in it:
-            feats = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    w, h, c = (
-                        real_decode(raw)
-                        if use_real_decoder
-                        else _fake_decode(raw)
-                    )
-                    feats.append((int(doc_id), len(payload), w, h, c, True))
-                except NotImplementedError:
-                    raise  # loud posture: missing codec is not a data error
-                except Exception:
-                    feats.append((int(doc_id), None, None, None, None, False))
-            yield pd.DataFrame(
-                feats,
-                columns=["doc_id", "byte_len", "width", "height", "channels", "ok"],
+    def feats(_i: int, raw: bytes) -> tuple:
+        if not use_real_decoder:
+            return (len(raw), *_fake_decode(raw))
+        if not raw.startswith(PNG_MAGIC):
+            raise NotImplementedError(
+                "real decode of non-PNG images needs Pillow, which is not "
+                "in this container; use use_real_decoder=False"
             )
+        w, h, c, _pixels = decode_png(raw)
+        return len(raw), w, h, c
 
-    return df.select("doc_id", "payload").mapInPandas(batches, FEATURE_SCHEMA)
+    return _decode_map(df, FEATURE_SCHEMA, feats)
 
 
 PNG_FEATURE_SCHEMA = (
@@ -129,53 +261,14 @@ def png_decode_features(df: DataFrame) -> DataFrame:
     A single wrong Paeth/Average/Sub/Up reconstruction anywhere in the
     image changes ``pixel_sum``, which is what lets a SQL oracle (that
     recomputes the sum arithmetically from the generator's parameters)
-    hash-gate a binary codec. Non-PNG payloads are ok=false rows
-    (data, not task, errors). Narrow Arrow map — no shuffle; pixels
-    never leave the worker, only 7 small integers per image do."""
+    hash-gate a binary codec. Pixels never leave the worker, only 7
+    small integers per image do."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, c, pixels = decode_png(raw)
+        return w, h, c, w * h, sum(pixels)
 
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            decode_png,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, pixels = decode_png(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            c,
-                            w * h,
-                            sum(pixels),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "n_pixels",
-                    "pixel_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PNG_FEATURE_SCHEMA
-    )
+    return _decode_map(df, PNG_FEATURE_SCHEMA, feats)
 
 
 def attach_png_payload(
@@ -190,38 +283,16 @@ def attach_png_payload(
     exact gradient for the pixel sums to match the oracle's
     closed-form recomputation."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            encode_png,
+    def make(i: int) -> bytes:
+        w, h = 16 + i % 16, 16 + i % 8
+        r0, g0, b0 = i % 256, (7 * i) % 256, (13 * i) % 256
+        pixels = b"".join(
+            bytes(((r0 + y) % 256, (g0 + y) % 256, (b0 + y) % 256)) * w
+            for y in range(h)
         )
+        return encode_png(w, h, 3, pixels, interlace=interlace)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 16 + i % 16, 16 + i % 8
-                r0, g0, b0 = i % 256, (7 * i) % 256, (13 * i) % 256
-                pixels = bytearray()
-                for y in range(h):
-                    row = bytes(
-                        (
-                            (r0 + y) % 256,
-                            (g0 + y) % 256,
-                            (b0 + y) % 256,
-                        )
-                    ) * w
-                    pixels += row
-                rows.append(
-                    (i, encode_png(w, h, 3, bytes(pixels),
-                                   interlace=interlace))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 WAV_FEATURE_SCHEMA = (
@@ -235,34 +306,17 @@ def attach_wav_payload(df: DataFrame, id_col: str) -> DataFrame:
     attach_png_payload): per row, ENCODE a real RIFF/WAVE PCM16 file
     whose header fields and sample stream derive from the id —
     sample_rate = 8000 + (id % 4) * 4000, channels = 1 + id % 2,
-    interleaved sample count n = 64 + 2 * (id % 32), and sample k =
-    ((id * 2654435761 + k * 40503) mod 65536) - 32768 (a Knuth-hash
-    LCG stride, exact in int64). The decoder must parse the actual
-    chunk layout and unpack the exact samples for the integer sums to
-    match the oracle's closed-form recomputation."""
+    interleaved sample count n = 64 + 2 * (id % 32), samples from
+    :func:`_lcg_pcm16` (exact in int64). The decoder must parse the
+    actual chunk layout and unpack the exact samples for the integer
+    sums to match the oracle's closed-form recomputation."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        return encode_wav(
+            _lcg_pcm16(i, 64 + 2 * (i % 32)), 8000 + (i % 4) * 4000, 1 + i % 2
+        )
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import encode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                rate = 8000 + (i % 4) * 4000
-                channels = 1 + i % 2
-                n = 64 + 2 * (i % 32)
-                samples = [
-                    ((i * 2654435761 + k * 40503) % 65536) - 32768
-                    for k in range(n)
-                ]
-                rows.append((i, encode_wav(samples, rate, channels)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def wav_decode_features(df: DataFrame) -> DataFrame:
@@ -273,111 +327,47 @@ def wav_decode_features(df: DataFrame) -> DataFrame:
     squares from the unpacked PCM stream. One mis-parsed header field
     or byte-order slip anywhere changes the sums, which is what lets a
     SQL oracle (recomputing them arithmetically from the generator's
-    parameters) hash-gate a binary codec. Non-PCM/corrupt payloads
-    become ok=false rows. Narrow Arrow map — no shuffle; samples never
-    leave the worker, only 8 small integers per clip do."""
+    parameters) hash-gate a binary codec. Samples never leave the
+    worker, only 8 small integers per clip do."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        rate, channels, _bits, samples = decode_wav(raw)
+        n_frames = len(samples) // channels
+        return (
+            rate,
+            channels,
+            n_frames,
+            n_frames * 1000 // rate,
+            sum(samples),
+            sum(s * s for s in samples),
+        )
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import decode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rate, channels, _bits, samples = decode_wav(bytes(payload))
-                    n_frames = len(samples) // channels
-                    rows.append(
-                        (
-                            int(doc_id),
-                            rate,
-                            channels,
-                            n_frames,
-                            n_frames * 1000 // rate,
-                            sum(samples),
-                            sum(s * s for s in samples),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "channels",
-                    "n_frames",
-                    "duration_ms",
-                    "sum_samples",
-                    "sum_squares",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, WAV_FEATURE_SCHEMA
-    )
+    return _decode_map(df, WAV_FEATURE_SCHEMA, feats)
 
 
 AUDIO_SCHEMA = (
     "doc_id long, n_samples long, duration_ms long, payload_md5 string, ok boolean"
 )
 
+# the fake audio decode reads the payload as 16-bit mono PCM at this rate
+FAKE_AUDIO_RATE = 16000
 
-def decode_audio_features(
-    df: DataFrame, sample_rate: int = 16000, use_real_decoder: bool = False
-) -> DataFrame:
-    """Audio decode → feature columns via Arrow-batched mapInPandas.
 
-    The fake decoder treats the payload as 16-bit mono PCM at
-    ``sample_rate`` (n_samples = bytes//2) and fingerprints the raw
-    payload; the real branch (torchaudio/soundfile) is gated and raises
-    loudly since those libs are absent here. Same batch/partitioning
-    contract as decode_image_features: narrow per-row map, failures are
-    ok=false rows.
-    """
+def decode_audio_features(df: DataFrame) -> DataFrame:
+    """Audio decode → feature columns. The fake decoder treats the
+    payload as 16-bit mono PCM at ``FAKE_AUDIO_RATE`` (n_samples =
+    bytes//2) and fingerprints the raw payload (soundfile/torchaudio
+    are absent here)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def feats(_i: int, raw: bytes) -> tuple:
+        n_samples = len(raw) // 2
+        return (
+            n_samples,
+            n_samples * 1000 // FAKE_AUDIO_RATE,
+            hashlib.md5(raw).hexdigest(),
+        )
 
-        import pandas as pd
-
-        if use_real_decoder:
-            try:
-                import soundfile  # noqa: F401
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real audio decode needs soundfile/torchaudio, not in "
-                    "this container; use use_real_decoder=False"
-                ) from e
-            raise NotImplementedError("real decode path not wired yet")
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    n_samples = len(raw) // 2
-                    rows.append(
-                        (
-                            int(doc_id),
-                            n_samples,
-                            n_samples * 1000 // sample_rate,
-                            hashlib.md5(raw).hexdigest(),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id), None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "duration_ms", "payload_md5", "ok"],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, AUDIO_SCHEMA)
+    return _decode_map(df, AUDIO_SCHEMA, feats)
 
 
 def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
@@ -385,24 +375,15 @@ def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
     byte windows ("frames") and fingerprint each — the UDTF-shaped
     one-row→many-rows pattern over binary columns."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def frames(doc_id, payload) -> list[tuple]:
+        raw = bytes(payload)
+        step = max(1, len(raw) // n_frames)
+        return [
+            (int(doc_id), i, hashlib.md5(raw[i * step : (i + 1) * step]).hexdigest())
+            for i in range(n_frames)
+        ]
 
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                step = max(1, len(raw) // n_frames)
-                for i in range(n_frames):
-                    chunk = raw[i * step : (i + 1) * step]
-                    rows.append(
-                        (int(doc_id), i, hashlib.md5(chunk).hexdigest())
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_hash"])
-
-    return df.select("doc_id", "payload").mapInPandas(batches, FRAME_SCHEMA)
+    return _row_map(df, ["doc_id", "payload"], FRAME_SCHEMA, frames)
 
 
 RESIZE_SCHEMA = (
@@ -411,140 +392,55 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_images(
-    df: DataFrame, target_w: int, target_h: int, use_real_decoder: bool = False
-) -> DataFrame:
-    """Image resize via Arrow-batched ``mapInPandas`` — the thumbnail /
-    normalization step a vision-training pipeline runs before feature
-    extraction. The resampling math is REAL nearest-neighbor
-    (vectorized numpy index gather over the pixel grid); only the
-    JPEG/PNG *decode* in front of it is the deterministic fake (payload
-    bytes reshaped to the fake-decode dimensions), because the codec
-    libraries are absent from this container. With a real decoder the
-    numpy kernel is unchanged — swap the grid source.
+def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
+    """Image resize — the thumbnail / normalization step a
+    vision-training pipeline runs before feature extraction. The
+    resampling math is REAL nearest-neighbor (:func:`_nearest`); only
+    the decode in front of it is the deterministic fake
+    (:func:`_fake_grid`). With a real decoder the numpy kernel is
+    unchanged — swap the grid source.
 
     Output carries the resized pixel buffer (``binary``, dst_w*dst_h
-    single channel) plus its md5 so tests can pin exact bytes.
-    Failures are ok=false rows, never task failures. Narrow map: no
-    shuffle, linear scale-out; batch memory is bounded by
-    (arrow batch rows) × max(src bytes, dst bytes)."""
+    single channel) plus its md5 so tests can pin exact bytes. Batch
+    memory is bounded by (arrow batch rows) × max(src bytes, dst
+    bytes)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, grid = _fake_grid(raw)
+        buf = _nearest(grid, target_w, target_h).tobytes()
+        return w, h, target_w, target_h, buf, hashlib.md5(buf).hexdigest()
 
-        import numpy as np
-        import pandas as pd
-
-        if use_real_decoder:
-            try:
-                from PIL import Image  # noqa: F401
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real image decode needs Pillow, which is not in this "
-                    "container; use use_real_decoder=False (deterministic fake)"
-                ) from e
-            raise NotImplementedError("real decode path not wired yet")
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    w, h, _ = _fake_decode(raw)
-                    # fake decode: tile/truncate payload into an h×w
-                    # single-channel grid (deterministic); an empty
-                    # payload decodes to the 16×16 zero grid so ok stays
-                    # true — same contract as decode_image_features
-                    if raw:
-                        grid = np.frombuffer(
-                            (raw * ((w * h) // len(raw) + 1))[: w * h],
-                            dtype=np.uint8,
-                        ).reshape(h, w)
-                    else:
-                        grid = np.zeros((h, w), dtype=np.uint8)
-                    # REAL nearest-neighbor resample (vectorized gather)
-                    yi = (np.arange(target_h) * h) // target_h
-                    xi = (np.arange(target_w) * w) // target_w
-                    out = grid[yi][:, xi]
-                    buf = out.tobytes()
-                    rows.append(
-                        (int(doc_id), w, h, target_w, target_h, buf,
-                         hashlib.md5(buf).hexdigest(), True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "src_w", "src_h", "dst_w", "dst_h",
-                         "pixels", "pixel_md5", "ok"],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, RESIZE_SCHEMA)
+    return _decode_map(df, RESIZE_SCHEMA, feats)
 
 
 AHASH_SCHEMA = "doc_id long, sig long, ok boolean"
 
+# aHash grid side: its d² = 64 bits fill exactly one signed 64-bit ``sig``
+AHASH_DIM = 8
 
-def ahash_signatures(
-    df: DataFrame, hash_dim: int = 8, use_real_decoder: bool = False
-) -> DataFrame:
+
+def ahash_signatures(df: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) per image: resize the decoded
-    grid to ``hash_dim``×``hash_dim`` (the same real nearest-neighbor
+    grid to ``AHASH_DIM``×``AHASH_DIM`` (the same real nearest-neighbor
     gather as :func:`resize_images`), threshold each cell at the grid
     mean, and pack the bits row-major into one signed 64-bit long.
-    The aHash MATH is real end to end; only the codec decode in front
-    is the deterministic fake (container has no PIL), same contract
-    as the rest of the module — swap the grid source for real use.
+    The aHash MATH is real end to end; only the decode in front is the
+    deterministic fake — swap the grid source for real use.
 
     Near-identical images differ in few bits, so downstream matching
     is integer Hamming distance — the image-side analog of the text
-    stack's sign-LSH signatures. Narrow Arrow map, no shuffle;
-    signature state is 8 bytes/image at any corpus size."""
+    stack's sign-LSH signatures. Signature state is 8 bytes/image at
+    any corpus size."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        small = _nearest(_fake_grid(raw)[2], AHASH_DIM, AHASH_DIM).astype(np.int64)
+        sig = 0
+        for b in (small > small.mean()).flatten():
+            sig = (sig << 1) | int(b)
+        # wrap into signed 64-bit (bit 63 set -> negative)
+        return (sig - (1 << 64) if sig >= 1 << 63 else sig,)
 
-        if use_real_decoder:
-            try:
-                from PIL import Image  # noqa: F401
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real image decode needs Pillow, which is not in this "
-                    "container; use use_real_decoder=False (deterministic fake)"
-                ) from e
-            raise NotImplementedError("real decode path not wired yet")
-        d = hash_dim
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    w, h, _ = _fake_decode(raw)
-                    if raw:
-                        grid = np.frombuffer(
-                            (raw * ((w * h) // len(raw) + 1))[: w * h],
-                            dtype=np.uint8,
-                        ).reshape(h, w)
-                    else:
-                        grid = np.zeros((h, w), dtype=np.uint8)
-                    yi = (np.arange(d) * h) // d
-                    xi = (np.arange(d) * w) // d
-                    small = grid[yi][:, xi].astype(np.int64)
-                    bits = (small > small.mean()).flatten()
-                    sig = 0
-                    for b in bits:  # d*d=64 iterations, vocabulary-free
-                        sig = (sig << 1) | int(b)
-                    # wrap into signed 64-bit (bit 63 set -> negative)
-                    if sig >= 1 << 63:
-                        sig -= 1 << 64
-                    rows.append((int(doc_id), sig, True))
-                except Exception:
-                    rows.append((int(doc_id), None, False))
-            yield pd.DataFrame(rows, columns=["doc_id", "sig", "ok"])
-
-    return df.select("doc_id", "payload").mapInPandas(batches, AHASH_SCHEMA)
+    return _decode_map(df, AHASH_SCHEMA, feats)
 
 
 def image_near_dup(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -600,40 +496,29 @@ def image_near_dup(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 ENERGY_SCHEMA = "doc_id long, frame_idx int, energy long"
 
+ENERGY_FRAME_BYTES = 256
 
-def audio_energy_frames(df: DataFrame, frame_bytes: int = 256) -> DataFrame:
+
+def audio_energy_frames(df: DataFrame) -> DataFrame:
     """Per-frame energy over binary audio payloads: REAL vectorized
-    numpy math (reshape to full frames, per-frame byte sums) behind
-    the Arrow mapInPandas edge — the actual computation a VAD/loudness
-    pass runs, with the decode step env-stubbed like every mm_*
-    operator. Only FULL frames are emitted (a trailing partial frame
-    would make the last energy depend on padding policy — the oracle
-    mirrors the same truncation). Int sums of uint8 bytes → exact."""
+    numpy math (reshape to full ``ENERGY_FRAME_BYTES`` frames, per-frame
+    byte sums) — the actual computation a VAD/loudness pass runs, with
+    the decode step env-stubbed. Only FULL frames are emitted (a
+    trailing partial frame would make the last energy depend on padding
+    policy — the oracle mirrors the same truncation). Int sums of uint8
+    bytes → exact."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def frames(doc_id, payload) -> list[tuple]:
+        raw = np.frombuffer(bytes(payload), dtype=np.uint8)
+        nf = len(raw) // ENERGY_FRAME_BYTES
+        energies = (
+            raw[: nf * ENERGY_FRAME_BYTES]
+            .reshape(nf, ENERGY_FRAME_BYTES)
+            .sum(axis=1, dtype=np.int64)
+        )
+        return [(int(doc_id), i, int(e)) for i, e in enumerate(energies)]
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = np.frombuffer(bytes(payload), dtype=np.uint8)
-                nf = len(raw) // frame_bytes
-                if nf == 0:
-                    continue
-                frames = raw[: nf * frame_bytes].reshape(nf, frame_bytes)
-                energies = frames.sum(axis=1, dtype=np.int64)
-                rows.extend(
-                    (int(doc_id), int(i), int(e))
-                    for i, e in enumerate(energies)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "energy"]
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, ENERGY_SCHEMA
-    )
+    return _row_map(df, ["doc_id", "payload"], ENERGY_SCHEMA, frames)
 
 
 WAV_VAD_SCHEMA = (
@@ -659,52 +544,25 @@ def wav_vad_features(df: DataFrame) -> DataFrame:
     same frames from the generator's closed form hash-gates the whole
     decode → frame → threshold → run-length chain.
 
-    Scale shape: one narrow Arrow map; samples never leave the worker,
-    five integers per clip do. The 100 TB form is identical — VAD is
-    embarrassingly per-clip."""
+    Scale shape: samples never leave the worker, five integers per clip
+    do. The 100 TB form is identical — VAD is embarrassingly per-clip."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        _rate, _ch, _bits, samples = decode_wav(raw)
+        n_frames = len(samples) // 16
+        voiced = best = run = max_e = 0
+        for f in range(n_frames):
+            e = sum(s * s for s in samples[16 * f : 16 * f + 16])
+            max_e = max(max_e, e)
+            if e > VAD_ENERGY_THRESHOLD:
+                voiced += 1
+                run += 1
+                best = max(best, run)
+            else:
+                run = 0
+        return n_frames, voiced, best, max_e
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import decode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    _rate, _ch, _bits, samples = decode_wav(bytes(payload))
-                    n_frames = len(samples) // 16
-                    voiced = best = run = 0
-                    max_e = 0
-                    for f in range(n_frames):
-                        e = sum(
-                            s * s for s in samples[16 * f : 16 * f + 16]
-                        )
-                        max_e = max(max_e, e)
-                        if e > VAD_ENERGY_THRESHOLD:
-                            voiced += 1
-                            run += 1
-                            best = max(best, run)
-                        else:
-                            run = 0
-                    rows.append(
-                        (int(doc_id), n_frames, voiced, best, max_e, True)
-                    )
-                except Exception:
-                    rows.append((int(doc_id), None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_frames16",
-                    "voiced_frames",
-                    "longest_voiced_run",
-                    "max_frame_energy",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, WAV_VAD_SCHEMA)
+    return _decode_map(df, WAV_VAD_SCHEMA, feats)
 
 
 PNG_DOWNSAMPLE_SCHEMA = (
@@ -723,45 +581,28 @@ def png_downsample_features(df: DataFrame) -> DataFrame:
     wrong block geometry, or wrong rounding all shift the sum.
 
     Odd trailing rows/columns are cropped (floor semantics), matching
-    the oracle's floor divisions. Narrow Arrow map; pixels stay in the
-    worker."""
+    the oracle's floor divisions. Pixels stay in the worker."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, c, px = decode_png(raw)
+        ow, oh = w // 2, h // 2
+        total = 0
+        stride = w * c
+        for y in range(oh):
+            r0 = 2 * y * stride
+            r1 = r0 + stride
+            for x in range(ow):
+                base = 2 * x * c
+                for ch in range(c):
+                    total += (
+                        px[r0 + base + ch]
+                        + px[r0 + base + c + ch]
+                        + px[r1 + base + ch]
+                        + px[r1 + base + c + ch]
+                    ) // 4
+        return ow, oh, total
 
-        from shippai_knowledge_etl_spark.operators.png_codec import decode_png
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, px = decode_png(bytes(payload))
-                    ow, oh = w // 2, h // 2
-                    total = 0
-                    stride = w * c
-                    for y in range(oh):
-                        r0 = 2 * y * stride
-                        r1 = r0 + stride
-                        for x in range(ow):
-                            base = 2 * x * c
-                            for ch in range(c):
-                                total += (
-                                    px[r0 + base + ch]
-                                    + px[r0 + base + c + ch]
-                                    + px[r1 + base + ch]
-                                    + px[r1 + base + c + ch]
-                                ) // 4
-                    rows.append((int(doc_id), ow, oh, total, True))
-                except Exception:
-                    rows.append((int(doc_id), None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "out_w", "out_h", "ds_pixel_sum", "ok"],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PNG_DOWNSAMPLE_SCHEMA
-    )
+    return _decode_map(df, PNG_DOWNSAMPLE_SCHEMA, feats)
 
 
 GIF_FEATURE_SCHEMA = (
@@ -781,36 +622,17 @@ def attach_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
     decoder's variable-width table reconstruction is exercised by
     every payload, not just literal codes."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.gif_codec import (
-            encode_gif,
+    def make(i: int) -> bytes:
+        w, h = 8 + i % 8, 8 + i % 4
+        palette = bytes(
+            v
+            for j in range(16)
+            for v in ((i + 5 * j) % 256, (2 * i + 11 * j) % 256, (3 * i + 7 * j) % 256)
         )
+        idx = bytes((x + 3 * y + i) % 16 for y in range(h) for x in range(w))
+        return encode_gif(w, h, palette, idx)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 8 + i % 8, 8 + i % 4
-                palette = bytes(
-                    v
-                    for j in range(16)
-                    for v in (
-                        (i + 5 * j) % 256,
-                        (2 * i + 11 * j) % 256,
-                        (3 * i + 7 * j) % 256,
-                    )
-                )
-                idx = bytes(
-                    (x + 3 * y + i) % 16 for y in range(h) for x in range(w)
-                )
-                rows.append((i, encode_gif(w, h, palette, idx)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def gif_decode_features(df: DataFrame) -> DataFrame:
@@ -821,54 +643,22 @@ def gif_decode_features(df: DataFrame) -> DataFrame:
     per-channel pixel sums. One wrong LZW code, palette slot or
     geometry field anywhere shifts a sum, which is what lets a SQL
     oracle (recomputing the sums in closed form from the generator)
-    hash-gate a binary decoder. Malformed payloads become ok=false
-    rows.
+    hash-gate a binary decoder.
 
-    Scale shape: one narrow Arrow map — indices and palette stay in
-    the worker; seven small integers per image return to the JVM."""
+    Scale shape: indices and palette stay in the worker; seven small
+    integers per image return to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, palette, idx = decode_gif(raw)
+        sr = sg = sb = 0
+        for p in idx:
+            o = 3 * p
+            sr += palette[o]
+            sg += palette[o + 1]
+            sb += palette[o + 2]
+        return w, h, len(palette) // 3, sr, sg, sb
 
-        from shippai_knowledge_etl_spark.operators.gif_codec import (
-            decode_gif,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, palette, idx = decode_gif(bytes(payload))
-                    sr = sg = sb = 0
-                    for p in idx:
-                        o = 3 * p
-                        sr += palette[o]
-                        sg += palette[o + 1]
-                        sb += palette[o + 2]
-                    rows.append(
-                        (int(doc_id), w, h, len(palette) // 3, sr, sg, sb, True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "n_colors",
-                    "sum_r",
-                    "sum_g",
-                    "sum_b",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, GIF_FEATURE_SCHEMA
-    )
+    return _decode_map(df, GIF_FEATURE_SCHEMA, feats)
 
 
 MULAW_FEATURE_SCHEMA = (
@@ -879,33 +669,14 @@ MULAW_FEATURE_SCHEMA = (
 
 def attach_mulaw_payload(df: DataFrame, id_col: str) -> DataFrame:
     """Deterministic G.711 mu-law WAV surrogate (round 10): the SAME
-    Knuth-LCG 16-bit sample stream as attach_wav_payload (sample k =
-    ((id · 2654435761 + k · 40503) mod 65536) − 32768, n = 64 +
-    2·(id % 32)), COMPANDED through the real mu-law encoder into a
-    format-tag-7 container — the 8 kHz telephony encoding speech
-    corpora actually arrive in."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            encode_wav_mulaw,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = 64 + 2 * (i % 32)
-                samples = [
-                    ((i * 2654435761 + k * 40503) % 65536) - 32768
-                    for k in range(n)
-                ]
-                rows.append((i, encode_wav_mulaw(samples, 8000, 1)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
+    Knuth-LCG 16-bit sample stream as attach_wav_payload
+    (:func:`_lcg_pcm16`, n = 64 + 2·(id % 32)), COMPANDED through the
+    real mu-law encoder into a format-tag-7 container — the 8 kHz
+    telephony encoding speech corpora actually arrive in."""
+    return _attach(
+        df,
+        id_col,
+        lambda i: encode_wav_mulaw(_lcg_pcm16(i, 64 + 2 * (i % 32)), 8000, 1),
     )
 
 
@@ -917,58 +688,16 @@ def wav_mulaw_features(df: DataFrame) -> DataFrame:
     original stream (sum and max of |x − Q(x)| — the numbers a codec
     qualification run reports). All integers; the oracle recomputes
     Q(x) per sample in closed form, so a wrong segment boundary, bias,
-    or byte inversion anywhere fails the hash.
+    or byte inversion anywhere fails the hash."""
 
-    Scale shape: one narrow Arrow map; per clip five integers return
-    to the JVM."""
+    def feats(i: int, raw: bytes) -> tuple:
+        _rate, _ch, bits, q = decode_wav(raw)
+        if bits != 8:
+            raise ValueError("expected mu-law storage width 8")
+        errs = [abs(x - y) for x, y in zip(_lcg_pcm16(i, len(q)), q)]
+        return len(q), sum(q), sum(errs), max(errs) if errs else 0
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.wav_codec import decode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    _rate, _ch, bits, q = decode_wav(bytes(payload))
-                    if bits != 8:
-                        raise ValueError("expected mu-law storage width 8")
-                    i = int(doc_id)
-                    orig = [
-                        ((i * 2654435761 + k * 40503) % 65536) - 32768
-                        for k in range(len(q))
-                    ]
-                    errs = [abs(x - y) for x, y in zip(orig, q)]
-                    rows.append(
-                        (
-                            i,
-                            len(q),
-                            sum(q),
-                            sum(errs),
-                            max(errs) if errs else 0,
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "sum_expanded",
-                    "sum_abs_err",
-                    "max_abs_err",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, MULAW_FEATURE_SCHEMA
-    )
+    return _decode_map(df, MULAW_FEATURE_SCHEMA, feats)
 
 
 BMP_FEATURE_SCHEMA = (
@@ -990,50 +719,24 @@ def attach_bmp_payload(df: DataFrame, id_col: str) -> DataFrame:
       mod 256 — runs of 7 so the run-length encoder emits genuine
       multi-pixel runs the decoder must expand exactly.
     """
+    palette = [((j * 17) % 256, (j * 29) % 256, (j * 43) % 256) for j in range(256)]
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        h = 8 + i % 8
+        if i % 2 == 0:
+            w = 12 + i % 13
+            rgb = bytes(
+                (b * i + x + 2 * y) % 256
+                for y in range(h)
+                for x in range(w)
+                for b in (1, 3, 5)
+            )
+            return encode_bmp_rgb24(w, h, rgb)
+        w = 14 + i % 11
+        idx = bytes((i + 3 * y + x // 7) % 256 for y in range(h) for x in range(w))
+        return encode_bmp_rle8(w, h, idx, palette)
 
-        from shippai_knowledge_etl_spark.operators.bmp_codec import (
-            encode_bmp_rgb24,
-            encode_bmp_rle8,
-        )
-
-        palette = [
-            ((j * 17) % 256, (j * 29) % 256, (j * 43) % 256)
-            for j in range(256)
-        ]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                h = 8 + i % 8
-                if i % 2 == 0:
-                    w = 12 + i % 13
-                    rgb = bytearray()
-                    for y in range(h):
-                        for x in range(w):
-                            rgb += bytes(
-                                (
-                                    (i + x + 2 * y) % 256,
-                                    (3 * i + x + 2 * y) % 256,
-                                    (5 * i + x + 2 * y) % 256,
-                                )
-                            )
-                    rows.append((i, encode_bmp_rgb24(w, h, bytes(rgb))))
-                else:
-                    w = 14 + i % 11
-                    idx = bytes(
-                        (i + 3 * y + x // 7) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    rows.append((i, encode_bmp_rle8(w, h, idx, palette)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def bmp_decode_features(df: DataFrame) -> DataFrame:
@@ -1041,109 +744,48 @@ def bmp_decode_features(df: DataFrame) -> DataFrame:
     order, BGR order and row padding (24bpp) or expand the RLE8 runs
     through the palette (8bpp), and emit integer pixel statistics. The
     extra top_row_sum (sum over the decoded TOP row) is what gates the
-    vertical flip — pixel_sum alone is flip-invariant. Non-BMP or
-    unimplemented-mode payloads are ok=false rows. Narrow Arrow map,
-    no shuffle; per image eight small values return to the JVM."""
+    vertical flip — pixel_sum alone is flip-invariant. Per image eight
+    small values return to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, c, rgb = decode_bmp(raw)
+        bpp, comp = struct.unpack_from("<HI", raw, 28)
+        mode = "rgb24" if (bpp, comp) == (24, 0) else "rle8"
+        return w, h, c, mode, w * h, sum(rgb), sum(rgb[: w * 3])
 
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.bmp_codec import (
-            decode_bmp,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    data = bytes(payload)
-                    w, h, c, rgb = decode_bmp(data)
-                    bpp, comp = _struct.unpack_from("<HI", data, 28)
-                    mode = "rgb24" if (bpp, comp) == (24, 0) else "rle8"
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            c,
-                            mode,
-                            w * h,
-                            sum(rgb),
-                            sum(rgb[: w * 3]),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id),) + (None,) * 7 + (False,)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "mode",
-                    "n_pixels",
-                    "pixel_sum",
-                    "top_row_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, BMP_FEATURE_SCHEMA
-    )
+    return _decode_map(df, BMP_FEATURE_SCHEMA, feats)
 
 
-def png_tile_signatures(df: DataFrame, band_rows: int = 4) -> DataFrame:
+PNG_TILE_SCHEMA = "doc_id long, sig string, n_bands int, ok boolean"
+
+# scanlines per horizontal band of png_tile_signatures
+TILE_BAND_ROWS = 4
+
+
+def png_tile_signatures(df: DataFrame) -> DataFrame:
     """Perceptual tile signatures from REAL decoded pixels: decode each
-    PNG, sum all channel values over horizontal bands of ``band_rows``
-    scanlines, and fingerprint ``"{w}x{h}:" + ",".join(band_sums)``
-    with md5 — the content-derived signature a pixel-level dedup joins
-    on. One wrong byte in any reconstructed scanline changes its
-    band's sum and therefore the signature, so a downstream
-    signature-equality join is gated by the DECODER, not just the
-    container metadata.
+    PNG, sum all channel values over horizontal bands of
+    ``TILE_BAND_ROWS`` scanlines, and fingerprint
+    ``"{w}x{h}:" + ",".join(band_sums)`` with md5 — the content-derived
+    signature a pixel-level dedup joins on. One wrong byte in any
+    reconstructed scanline changes its band's sum and therefore the
+    signature, so a downstream signature-equality join is gated by the
+    DECODER, not just the container metadata.
 
-    Scale shape: narrow Arrow map; pixels never shuffle — only the
-    32-char signature does (the mm_image_near_dup discipline)."""
+    Scale shape: pixels never shuffle — only the 32-char signature does
+    (the mm_image_near_dup discipline)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, c, pixels = decode_png(raw)
+        row_bytes = w * c
+        sums = [
+            sum(pixels[b0 * row_bytes : min(h, b0 + TILE_BAND_ROWS) * row_bytes])
+            for b0 in range(0, h, TILE_BAND_ROWS)
+        ]
+        key = f"{w}x{h}:" + ",".join(str(s) for s in sums)
+        return hashlib.md5(key.encode("ascii")).hexdigest(), len(sums)
 
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            decode_png,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, pixels = decode_png(bytes(payload))
-                    row_bytes = w * c
-                    sums = []
-                    for b0 in range(0, h, band_rows):
-                        lo = b0 * row_bytes
-                        hi = min(h, b0 + band_rows) * row_bytes
-                        sums.append(sum(pixels[lo:hi]))
-                    key = f"{w}x{h}:" + ",".join(str(s) for s in sums)
-                    sig = hashlib.md5(key.encode("ascii")).hexdigest()
-                    rows.append((int(doc_id), sig, len(sums), True))
-                except Exception:
-                    rows.append((int(doc_id), None, None, False))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sig", "n_bands", "ok"]
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, "doc_id long, sig string, n_bands int, ok boolean"
-    )
+    return _decode_map(df, PNG_TILE_SCHEMA, feats)
 
 
 RESAMPLE_FEATURE_SCHEMA = (
@@ -1161,61 +803,22 @@ def wav_resample_features(df: DataFrame) -> DataFrame:
     numerator non-negative (README division audit) so Python //,
     Spark div and DuckDB // agree sample-exactly.
 
-    Scale shape: narrow Arrow map over payload bytes; PCM stays in the
-    worker, eight small values per clip return to the JVM."""
+    Scale shape: PCM stays in the worker, eight small values per clip
+    return to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        rate, ch, _bits, s = decode_wav(raw)
+        nf_in = len(s) // ch
+        nf_out = nf_in // 2
+        out = [
+            ((s[2 * j * ch + c] + 32768) + (s[(2 * j + 1) * ch + c] + 32768)) // 2
+            - 32768
+            for j in range(nf_out)
+            for c in range(ch)
+        ]
+        return rate // 2, ch, nf_in, nf_out, sum(out), sum(v * v for v in out)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            decode_wav,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rate, ch, _bits, s = decode_wav(bytes(payload))
-                    nf_in = len(s) // ch
-                    nf_out = nf_in // 2
-                    out = [
-                        ((s[2 * j * ch + c] + 32768)
-                         + (s[(2 * j + 1) * ch + c] + 32768)) // 2
-                        - 32768
-                        for j in range(nf_out)
-                        for c in range(ch)
-                    ]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            rate // 2,
-                            ch,
-                            nf_in,
-                            nf_out,
-                            sum(out),
-                            sum(v * v for v in out),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 6 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate_out",
-                    "channels",
-                    "n_frames_in",
-                    "n_frames_out",
-                    "sum_out",
-                    "sum_squares_out",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, RESAMPLE_FEATURE_SCHEMA
-    )
+    return _decode_map(df, RESAMPLE_FEATURE_SCHEMA, feats)
 
 
 AVI_FEATURE_SCHEMA = (
@@ -1234,38 +837,20 @@ def attach_avi_payload(df: DataFrame, id_col: str) -> DataFrame:
     5f term makes every frame distinct, so frame ORDER is checkable
     downstream."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        w, h = 8 + i % 9, 6 + i % 6
+        frames = [
+            bytes(
+                (b * i + x + 2 * y + 5 * f) % 256
+                for y in range(h)
+                for x in range(w)
+                for b in (1, 3, 5)
+            )
+            for f in range(2 + i % 3)
+        ]
+        return encode_avi_rgb24(w, h, frames, 10 + i % 5)
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            encode_avi_rgb24,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 8 + i % 9, 6 + i % 6
-                fps, nf = 10 + i % 5, 2 + i % 3
-                frames = []
-                for f in range(nf):
-                    buf = bytearray()
-                    for y in range(h):
-                        for x in range(w):
-                            buf += bytes(
-                                (
-                                    (i + x + 2 * y + 5 * f) % 256,
-                                    (3 * i + x + 2 * y + 5 * f) % 256,
-                                    (5 * i + x + 2 * y + 5 * f) % 256,
-                                )
-                            )
-                    frames.append(bytes(buf))
-                rows.append((i, encode_avi_rgb24(w, h, frames, fps)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def avi_decode_features(df: DataFrame) -> DataFrame:
@@ -1274,53 +859,14 @@ def avi_decode_features(df: DataFrame) -> DataFrame:
     (bottom-up flip + BGR swap + row padding, per frame), and emit
     integer statistics — the total pixel sum over ALL frames and the
     LAST frame's sum separately (frame reordering or a dropped '00db'
-    chunk changes the latter even when the former survives).
-    Out-of-scope AVIs are ok=false rows. Narrow Arrow map; frames
+    chunk changes the latter even when the former survives). Frames
     never leave the worker."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, fps, nf, frames = decode_avi(raw)
+        return w, h, fps, nf, sum(sum(f) for f in frames), sum(frames[-1])
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            decode_avi,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, fps, nf, frames = decode_avi(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            fps,
-                            nf,
-                            sum(sum(f) for f in frames),
-                            sum(frames[-1]),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 6 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "fps",
-                    "n_frames",
-                    "total_pixel_sum",
-                    "last_frame_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, AVI_FEATURE_SCHEMA
-    )
+    return _decode_map(df, AVI_FEATURE_SCHEMA, feats)
 
 
 def attach_srt_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -1331,33 +877,21 @@ def attach_srt_payload(df: DataFrame, id_col: str) -> DataFrame:
     the sidecar format every video-caption pipeline parses next to
     the container."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fmt(ms: int) -> str:
+        return (
+            f"{ms // 3600000:02d}:{ms % 3600000 // 60000:02d}:"
+            f"{ms % 60000 // 1000:02d},{ms % 1000:03d}"
+        )
 
-        def fmt(ms: int) -> str:
-            return (
-                f"{ms // 3600000:02d}:{ms % 3600000 // 60000:02d}:"
-                f"{ms % 60000 // 1000:02d},{ms % 1000:03d}"
-            )
+    def make(i: int) -> str:
+        blocks = []
+        for j in range(2 + i % 4):
+            s = j * 1500 + (i % 7) * 100
+            e = s + 900 + (i % 5) * 50
+            blocks.append(f"{j + 1}\n{fmt(s)} --> {fmt(e)}\ncue {j} of doc {i}")
+        return "\n\n".join(blocks)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                blocks = []
-                for j in range(2 + i % 4):
-                    s = j * 1500 + (i % 7) * 100
-                    e = s + 900 + (i % 5) * 50
-                    blocks.append(
-                        f"{j + 1}\n{fmt(s)} --> {fmt(e)}\n"
-                        f"cue {j} of doc {i}"
-                    )
-                rows.append((i, "\n\n".join(blocks)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload string"
-    )
+    return _attach(df, id_col, make, "doc_id long, payload string")
 
 
 PNG16_FEATURE_SCHEMA = (
@@ -1372,88 +906,64 @@ def attach_png16_payload(df: DataFrame, id_col: str) -> DataFrame:
     mod 65536 — full-range 16-bit values so a high/low byte swap or an
     8-bit truncation anywhere is unmissable in the sums."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def make(i: int) -> bytes:
+        w, h = 8 + i % 8, 8 + i % 4
+        arr = np.empty((h, w * 3), dtype=np.uint16)
+        for y in range(h):
+            for x in range(w):
+                for c in range(3):
+                    arr[y, 3 * x + c] = (i * 257 + c * 9999 + 1000 * y + x) % 65536
+        return encode_png16(w, h, 3, arr)
 
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            encode_png16,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 8 + i % 8, 8 + i % 4
-                arr = np.empty((h, w * 3), dtype=np.uint16)
-                for y in range(h):
-                    for x in range(w):
-                        for c in range(3):
-                            arr[y, 3 * x + c] = (
-                                i * 257 + c * 9999 + 1000 * y + x
-                            ) % 65536
-                rows.append((i, encode_png16(w, h, 3, arr)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def png16_decode_features(df: DataFrame) -> DataFrame:
     """REAL 16-bit decode: reconstruct the byte stream through the
     five filters at bpp = 6, reassemble big-endian uint16 samples, and
-    emit exact integer statistics. Narrow Arrow map, no shuffle."""
+    emit exact integer statistics."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, c, u16 = decode_png16(raw)
+        return w, h, c, w * h * c, int(u16.astype("int64").sum()), int(u16.max())
 
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            decode_png16,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, u16 = decode_png16(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            c,
-                            w * h * c,
-                            int(u16.astype("int64").sum()),
-                            int(u16.max()),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 6 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "n_samples",
-                    "sample_sum",
-                    "max_sample",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PNG16_FEATURE_SCHEMA
-    )
+    return _decode_map(df, PNG16_FEATURE_SCHEMA, feats)
 
 
 JPEG_FEATURE_SCHEMA = (
     "doc_id long, width int, height int, channels int, mode string, "
     "pixel_sum long, wsum long, ok boolean"
 )
+
+
+def _luma_blocks(i: int, w: int, h: int, f: int = 0) -> list[list[list[int]]]:
+    """Flat 8×8 luma blocks at (id + 7bx + 13by + 31f) mod 256, qDC=5."""
+    return [
+        [flat_block((i + 7 * bx + 13 * by + 31 * f) % 256, 5) for bx in range(w // 8)]
+        for by in range(h // 8)
+    ]
+
+
+def _jpeg_flat_components(i: int) -> tuple[int, int, list[dict], int]:
+    """(w, h, components, restart interval) of the flat-DC JPEG image
+    for id i — the generator documented on :func:`attach_jpeg_payload`.
+    Every call builds fresh coefficient lists (callers add AC in place)."""
+    if i % 2 == 0:
+        w, h = 24 + 8 * (i % 3), 16 + 8 * (i % 2)
+        return w, h, [{"coeffs": _luma_blocks(i, w, h), "q": [5] * 64, "hv": (1, 1)}], 3
+    w, h = 32 + 16 * ((i // 2) % 2), 32
+
+    def chroma(a: int, kx: int, ky: int) -> list[list[list[int]]]:
+        return [
+            [flat_block((a * i + kx * mx + ky * my) % 256, 6) for mx in range(w // 16)]
+            for my in range(2)
+        ]
+
+    return w, h, [
+        {"coeffs": _luma_blocks(i, w, h), "q": [5] * 64, "hv": (2, 2)},
+        {"coeffs": chroma(3, 17, 29), "q": [6] * 64, "hv": (1, 1)},
+        {"coeffs": chroma(5, 23, 31), "q": [6] * 64, "hv": (1, 1)},
+    ], 2
 
 
 def attach_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -1473,76 +983,11 @@ def attach_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     DC prediction across restarts, byte stuffing, and 4:2:0
     upsampling."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        w, h, comps, ri = _jpeg_flat_components(i)
+        return encode_jpeg(w, h, comps, restart_interval=ri)
 
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            encode_jpeg,
-            flat_block,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                if i % 2 == 0:
-                    w, h = 24 + 8 * (i % 3), 16 + 8 * (i % 2)
-                    coeffs = [
-                        [
-                            flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                            for bx in range(w // 8)
-                        ]
-                        for by in range(h // 8)
-                    ]
-                    data = encode_jpeg(
-                        w,
-                        h,
-                        [{"coeffs": coeffs, "q": [5] * 64, "hv": (1, 1)}],
-                        restart_interval=3,
-                    )
-                else:
-                    w, h = 32 + 16 * ((i // 2) % 2), 32
-                    ly = [
-                        [
-                            flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                            for bx in range(w // 8)
-                        ]
-                        for by in range(4)
-                    ]
-                    cb = [
-                        [
-                            flat_block(
-                                (3 * i + 17 * mx + 29 * my) % 256, 6
-                            )
-                            for mx in range(w // 16)
-                        ]
-                        for my in range(2)
-                    ]
-                    cr = [
-                        [
-                            flat_block(
-                                (5 * i + 23 * mx + 31 * my) % 256, 6
-                            )
-                            for mx in range(w // 16)
-                        ]
-                        for my in range(2)
-                    ]
-                    data = encode_jpeg(
-                        w,
-                        h,
-                        [
-                            {"coeffs": ly, "q": [5] * 64, "hv": (2, 2)},
-                            {"coeffs": cb, "q": [6] * 64, "hv": (1, 1)},
-                            {"coeffs": cr, "q": [6] * 64, "hv": (1, 1)},
-                        ],
-                        restart_interval=2,
-                    )
-                rows.append((i, data))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def jpeg_decode_features(df: DataFrame) -> DataFrame:
@@ -1553,65 +998,18 @@ def jpeg_decode_features(df: DataFrame) -> DataFrame:
     Σ value(x,y)·(x + 2y + 1) (summed over channels), which a flat
     whole-image statistic cannot fake: a block decoded into the wrong
     position, a missed restart predictor reset, or a swapped chroma
-    plane all shift wsum. Malformed payloads become ok=false rows.
+    plane all shift wsum.
 
-    Scale shape: one narrow Arrow map — coefficients and pixels stay
-    in the Python worker; six small values per image return to the
-    JVM (the mm_png_decode class)."""
+    Scale shape: coefficients and pixels stay in the Python worker; six
+    small values per image return to the JVM (the mm_png_decode
+    class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, nc, pix = decode_jpeg(raw)
+        mode = "gray8" if nc == 1 else "ycbcr420"
+        return (w, h, nc, mode, *_weighted_sums(_u8(pix), h, w, nc))
 
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            decode_jpeg,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, nc, pix = decode_jpeg(bytes(payload))
-                    a = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
-                    a = a.reshape(h, w, nc)
-                    wgt = (
-                        np.arange(w, dtype=np.int64)[None, :]
-                        + 2 * np.arange(h, dtype=np.int64)[:, None]
-                        + 1
-                    )
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            nc,
-                            "gray8" if nc == 1 else "ycbcr420",
-                            int(a.sum()),
-                            int((a.sum(axis=2) * wgt).sum()),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "mode",
-                    "pixel_sum",
-                    "wsum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, JPEG_FEATURE_SCHEMA
-    )
+    return _decode_map(df, JPEG_FEATURE_SCHEMA, feats)
 
 
 JPEG_PROG_SCHEMA = (
@@ -1641,92 +1039,32 @@ def attach_jpeg_progressive_payload(df: DataFrame, id_col: str) -> DataFrame:
     on these is the EQUIVALENCE: both decodes must agree pixel for
     pixel (diff sums 0)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            ZIGZAG,
-            encode_jpeg,
-            encode_jpeg_progressive,
-            flat_block,
-        )
-
-        def grids(i: int):
-            """(w, h, components) with flat DC; AC added by caller."""
-            if i % 2 == 0:
-                w, h = 24 + 8 * (i % 3), 16 + 8 * (i % 2)
-                coeffs = [
-                    [
-                        flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                        for bx in range(w // 8)
-                    ]
-                    for by in range(h // 8)
-                ]
-                return w, h, [
-                    {"coeffs": coeffs, "q": [5] * 64, "hv": (1, 1)}
-                ]
-            w, h = 32 + 16 * ((i // 2) % 2), 32
-            ly = [
-                [
-                    flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                    for bx in range(w // 8)
-                ]
-                for by in range(4)
-            ]
-            cb = [
-                [
-                    flat_block((3 * i + 17 * mx + 29 * my) % 256, 6)
-                    for mx in range(w // 16)
-                ]
-                for my in range(2)
-            ]
-            cr = [
-                [
-                    flat_block((5 * i + 23 * mx + 31 * my) % 256, 6)
-                    for mx in range(w // 16)
-                ]
-                for my in range(2)
-            ]
-            return w, h, [
-                {"coeffs": ly, "q": [5] * 64, "hv": (2, 2)},
-                {"coeffs": cb, "q": [6] * 64, "hv": (1, 1)},
-                {"coeffs": cr, "q": [6] * 64, "hv": (1, 1)},
-            ]
-
-        def add_ac(comps, i: int):
-            for ci, c in enumerate(comps):
-                nac = 11 if ci == 0 else 5
-                for by, row in enumerate(c["coeffs"]):
-                    for bx, blk in enumerate(row):
-                        for k in range(1, 1 + nac):
-                            blk[ZIGZAG[k]] = (
-                                (i * 31 + ci * 11 + bx * 7 + by * 13 + k * 5)
-                                % 15
-                            ) - 7
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                ri = 3 if i % 2 == 0 else 2
-                w, h, comps = grids(i)
-                flat_prog = encode_jpeg_progressive(
-                    w, h, comps, restart_interval=ri
-                )
-                add_ac(comps, i)
-                acb_base = encode_jpeg(w, h, comps, restart_interval=ri)
-                acb_prog = encode_jpeg_progressive(
-                    w, h, comps, restart_interval=ri
-                )
-                rows.append((i, flat_prog, acb_base, acb_prog))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "flat_prog", "acb_base", "acb_prog"],
+    def streams(doc_id) -> list[tuple]:
+        i = int(doc_id)
+        w, h, comps, ri = _jpeg_flat_components(i)
+        flat_prog = encode_jpeg_progressive(w, h, comps, restart_interval=ri)
+        for ci, c in enumerate(comps):
+            nac = 11 if ci == 0 else 5
+            for by, row in enumerate(c["coeffs"]):
+                for bx, blk in enumerate(row):
+                    for k in range(1, 1 + nac):
+                        blk[ZIGZAG[k]] = (
+                            (i * 31 + ci * 11 + bx * 7 + by * 13 + k * 5) % 15
+                        ) - 7
+        return [
+            (
+                i,
+                flat_prog,
+                encode_jpeg(w, h, comps, restart_interval=ri),
+                encode_jpeg_progressive(w, h, comps, restart_interval=ri),
             )
+        ]
 
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches,
+    return _row_map(
+        _ids(df, id_col),
+        ["doc_id"],
         "doc_id long, flat_prog binary, acb_base binary, acb_prog binary",
+        streams,
     )
 
 
@@ -1740,80 +1078,38 @@ def jpeg_progressive_features(df: DataFrame) -> DataFrame:
     every scan landed exactly). n_scans is parsed from the stream (SOS
     marker count), pinning the scan script itself.
 
-    Scale shape: one narrow Arrow map — three full entropy decodes per
-    row stay in the Python worker; eight small values per image return
-    to the JVM (the mm_png_decode class)."""
+    Scale shape: three full entropy decodes per row stay in the Python
+    worker; eight small values per image return to the JVM (the
+    mm_png_decode class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            decode_jpeg,
+    def feats(_i: int, flat: bytes, base: bytes, prog: bytes) -> tuple:
+        w, h, nc, pix = decode_jpeg(flat)
+        bw, bh, bn, bpix = decode_jpeg(base)
+        pw, ph, pn, ppix = decode_jpeg(prog)
+        if (bw, bh, bn) != (pw, ph, pn):
+            raise ValueError("geometry mismatch base vs prog")
+        return (
+            w,
+            h,
+            nc,
+            flat.count(b"\xff\xda"),
+            *_weighted_sums(_u8(pix), h, w, nc),
+            *_weighted_sums(np.abs(_u8(ppix) - _u8(bpix)), bh, bw, bn),
         )
 
-        def sums(w, h, nc, pix):
-            a = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
-            a = a.reshape(h, w, nc).sum(axis=2)
-            wgt = (
-                np.arange(w, dtype=np.int64)[None, :]
-                + 2 * np.arange(h, dtype=np.int64)[:, None]
-                + 1
-            )
-            return int(a.sum()), int((a * wgt).sum())
-
-        for pdf in it:
-            rows = []
-            for doc_id, fp, ab, ap in zip(
-                pdf["doc_id"], pdf["flat_prog"], pdf["acb_base"],
-                pdf["acb_prog"],
-            ):
-                try:
-                    fp = bytes(fp)
-                    w, h, nc, pix = decode_jpeg(fp)
-                    psum, wsum = sums(w, h, nc, pix)
-                    n_scans = fp.count(b"\xff\xda")
-                    bw, bh, bn, bpix = decode_jpeg(bytes(ab))
-                    pw, ph, pn, ppix = decode_jpeg(bytes(ap))
-                    if (bw, bh, bn) != (pw, ph, pn):
-                        raise ValueError("geometry mismatch base vs prog")
-                    d = np.frombuffer(ppix, dtype=np.uint8).astype(
-                        np.int64
-                    ) - np.frombuffer(bpix, dtype=np.uint8).astype(np.int64)
-                    d = np.abs(d).reshape(bh, bw, bn).sum(axis=2)
-                    wgt = (
-                        np.arange(bw, dtype=np.int64)[None, :]
-                        + 2 * np.arange(bh, dtype=np.int64)[:, None]
-                        + 1
-                    )
-                    rows.append(
-                        (
-                            int(doc_id), w, h, nc, n_scans, psum, wsum,
-                            int(d.sum()), int((d * wgt).sum()), True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels", "n_scans",
-                    "pixel_sum", "wsum", "diff_sum", "diff_wsum", "ok",
-                ],
-            )
-
-    return df.select(
-        "doc_id", "flat_prog", "acb_base", "acb_prog"
-    ).mapInPandas(batches, JPEG_PROG_SCHEMA)
+    return _decode_map(
+        df, JPEG_PROG_SCHEMA, feats, ("flat_prog", "acb_base", "acb_prog")
+    )
 
 
 ADPCM_FEATURE_SCHEMA = (
     "doc_id long, n_samples long, n_blocks long, sum_decoded long, "
     "max_abs long, sum_abs_err long, ok boolean"
 )
+
+
+def _adpcm_samples(i: int, n: int) -> list[int]:
+    return [((i * 2654435761 + k * k * 40503) % 8192) - 4096 for k in range(n)]
 
 
 def attach_adpcm_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -1824,30 +1120,12 @@ def attach_adpcm_payload(df: DataFrame, id_col: str) -> DataFrame:
     payload spans MULTIPLE blocks) through the real IMA encoder with
     samples-per-block 33 and initial step index id mod 89 — the whole
     step table gets exercised across the corpus."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            encode_wav_ima,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = 33 * (2 + i % 2)
-                samples = [
-                    ((i * 2654435761 + k * k * 40503) % 8192) - 4096
-                    for k in range(n)
-                ]
-                rows.append(
-                    (i, encode_wav_ima(samples, 8000, 33, init_index=i % 89))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
+    return _attach(
+        df,
+        id_col,
+        lambda i: encode_wav_ima(
+            _adpcm_samples(i, 33 * (2 + i % 2)), 8000, 33, init_index=i % 89
+        ),
     )
 
 
@@ -1859,58 +1137,22 @@ def adpcm_decode_features(df: DataFrame) -> DataFrame:
     original. One wrong step-table entry, index clamp or nibble order
     shifts every subsequent sample, so the sums catch everything.
 
-    Scale shape: one narrow Arrow map, no shuffle — the mm_wav_mulaw
-    class; six integers per clip return to the JVM."""
+    Scale shape: the mm_wav_mulaw class; six integers per clip return
+    to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            decode_wav_ima,
+    def feats(i: int, raw: bytes) -> tuple:
+        _rate, spb, dec = decode_wav_ima(raw)
+        n = len(dec)
+        orig = _adpcm_samples(i, n)
+        return (
+            n,
+            n // spb,
+            sum(dec),
+            max(abs(s) for s in dec),
+            sum(abs(a - b) for a, b in zip(orig, dec)),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    i = int(doc_id)
-                    _rate, spb, dec = decode_wav_ima(bytes(payload))
-                    n = len(dec)
-                    orig = [
-                        ((i * 2654435761 + k * k * 40503) % 8192) - 4096
-                        for k in range(n)
-                    ]
-                    rows.append(
-                        (
-                            i,
-                            n,
-                            n // spb,
-                            sum(dec),
-                            max(abs(s) for s in dec),
-                            sum(abs(a - b) for a, b in zip(orig, dec)),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "n_blocks",
-                    "sum_decoded",
-                    "max_abs",
-                    "sum_abs_err",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, ADPCM_FEATURE_SCHEMA
-    )
+    return _decode_map(df, ADPCM_FEATURE_SCHEMA, feats)
 
 
 TIFF_FEATURE_SCHEMA = (
@@ -1928,44 +1170,20 @@ def attach_tiff_payload(df: DataFrame, id_col: str) -> DataFrame:
     strip 3) with the run-friendly pattern (5id + 31·(x//6) + 11y)
     mod 256 so the RLE encoder emits genuine repeat packets."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.tiff_codec import (
-            encode_tiff,
+    def make(i: int) -> bytes:
+        if i % 2 == 0:
+            w, h = 17 + i % 7, 9 + i % 5
+            pix = bytes((i + 3 * x + 7 * y) % 256 for y in range(h) for x in range(w))
+            return encode_tiff(
+                w, h, pix, compression=1, rows_per_strip=4, big_endian=(i % 4 == 2)
+            )
+        w, h = 18 + i % 6, 8 + i % 4
+        pix = bytes(
+            (5 * i + 31 * (x // 6) + 11 * y) % 256 for y in range(h) for x in range(w)
         )
+        return encode_tiff(w, h, pix, compression=32773, rows_per_strip=3)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                if i % 2 == 0:
-                    w, h = 17 + i % 7, 9 + i % 5
-                    pix = bytes(
-                        (i + 3 * x + 7 * y) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    data = encode_tiff(
-                        w, h, pix, compression=1, rows_per_strip=4,
-                        big_endian=(i % 4 == 2),
-                    )
-                else:
-                    w, h = 18 + i % 6, 8 + i % 4
-                    pix = bytes(
-                        (5 * i + 31 * (x // 6) + 11 * y) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    data = encode_tiff(
-                        w, h, pix, compression=32773, rows_per_strip=3
-                    )
-                rows.append((i, data))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def tiff_decode_features(df: DataFrame) -> DataFrame:
@@ -1973,69 +1191,23 @@ def tiff_decode_features(df: DataFrame) -> DataFrame:
     walk, strip reassembly, PackBits expansion — then the exact pixel
     sum and the position-weighted wsum (Σ value·(x + 2y + 1)), which
     breaks if strips land out of order or a PackBits packet expands
-    wrong. Malformed payloads become ok=false rows.
+    wrong.
 
-    Scale shape: one narrow Arrow map — strips and pixels stay in the
-    worker (the mm_png_decode class)."""
+    Scale shape: strips and pixels stay in the worker (the
+    mm_png_decode class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.tiff_codec import (
-            decode_tiff,
+    def feats(i: int, raw: bytes) -> tuple:
+        w, h, pix = decode_tiff(raw)
+        return (
+            w,
+            h,
+            "raw" if i % 2 == 0 else "packbits",
+            "MM" if raw[:2] == b"MM" else "II",
+            -(-h // (4 if i % 2 == 0 else 3)),
+            *_weighted_sums(_u8(pix), h, w),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    w, h, pix = decode_tiff(raw)
-                    a = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
-                    a = a.reshape(h, w)
-                    wgt = (
-                        np.arange(w, dtype=np.int64)[None, :]
-                        + 2 * np.arange(h, dtype=np.int64)[:, None]
-                        + 1
-                    )
-                    i = int(doc_id)
-                    rows.append(
-                        (
-                            i,
-                            w,
-                            h,
-                            "raw" if i % 2 == 0 else "packbits",
-                            "MM" if raw[:2] == b"MM" else "II",
-                            -(-h // (4 if i % 2 == 0 else 3)),
-                            int(a.sum()),
-                            int((a * wgt).sum()),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "mode",
-                    "byte_order",
-                    "n_strips",
-                    "pixel_sum",
-                    "wsum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, TIFF_FEATURE_SCHEMA
-    )
+    return _decode_map(df, TIFF_FEATURE_SCHEMA, feats)
 
 
 MJPEG_FEATURE_SCHEMA = (
@@ -2052,45 +1224,18 @@ def attach_mjpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     in an AVI 'MJPG' stream. The whole encode path is real: Annex-K
     Huffman per frame, RIFF/movi '00dc' chunking around them."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        frames = [
+            encode_jpeg(
+                24,
+                16,
+                [{"coeffs": _luma_blocks(i, 24, 16, f), "q": [5] * 64, "hv": (1, 1)}],
+            )
+            for f in range(2 + i % 3)
+        ]
+        return encode_avi_mjpeg(24, 16, frames, fps=10)
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            encode_avi_mjpeg,
-        )
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            encode_jpeg,
-            flat_block,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 24, 16
-                frames = []
-                for f in range(2 + i % 3):
-                    coeffs = [
-                        [
-                            flat_block(
-                                (i + 7 * bx + 13 * by + 31 * f) % 256, 5
-                            )
-                            for bx in range(w // 8)
-                        ]
-                        for by in range(h // 8)
-                    ]
-                    frames.append(
-                        encode_jpeg(
-                            w, h,
-                            [{"coeffs": coeffs, "q": [5] * 64, "hv": (1, 1)}],
-                        )
-                    )
-                rows.append((i, encode_avi_mjpeg(w, h, frames, fps=10)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def mjpeg_decode_features(df: DataFrame) -> DataFrame:
@@ -2098,66 +1243,24 @@ def mjpeg_decode_features(df: DataFrame) -> DataFrame:
     JPEG frames, then run the full baseline JPEG decoder on EVERY
     frame; emit the total pixel sum plus the frame-order-weighted
     ordered_sum Σ (f+1)·frame_sum, which any frame reordering breaks
-    while pixel_sum alone would not. Malformed payloads → ok=false.
+    while pixel_sum alone would not.
 
-    Scale shape: one narrow Arrow map; frames and pixels stay in the
-    worker (the mm_avi_decode class)."""
+    Scale shape: frames and pixels stay in the worker (the
+    mm_avi_decode class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        w, h, fps, frames = decode_avi_mjpeg(raw)
+        total = ordered = 0
+        for f, jf in enumerate(frames):
+            fw, fh, nc, pix = decode_jpeg(jf)
+            if (fw, fh, nc) != (w, h, 1):
+                raise ValueError("frame geometry mismatch")
+            s = int(_u8(pix).sum())
+            total += s
+            ordered += (f + 1) * s
+        return w, h, fps, len(frames), total, ordered
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            decode_avi_mjpeg,
-        )
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            decode_jpeg,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, fps, frames = decode_avi_mjpeg(bytes(payload))
-                    total = 0
-                    ordered = 0
-                    for f, jf in enumerate(frames):
-                        fw, fh, nc, pix = decode_jpeg(jf)
-                        if (fw, fh, nc) != (w, h, 1):
-                            raise ValueError("frame geometry mismatch")
-                        s = int(
-                            np.frombuffer(pix, dtype=np.uint8)
-                            .astype(np.int64)
-                            .sum()
-                        )
-                        total += s
-                        ordered += (f + 1) * s
-                    rows.append(
-                        (int(doc_id), w, h, fps, len(frames), total,
-                         ordered, True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "fps",
-                    "n_frames",
-                    "pixel_sum",
-                    "ordered_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, MJPEG_FEATURE_SCHEMA
-    )
+    return _decode_map(df, MJPEG_FEATURE_SCHEMA, feats)
 
 
 TAR_FEATURE_SCHEMA = (
@@ -2174,88 +1277,40 @@ def attach_tar_payload(df: DataFrame, id_col: str) -> DataFrame:
     256, length 40 + (id+m) mod 17, through the real header/checksum
     encoder (operators/tar_codec.py)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.tar_codec import (
-            encode_tar,
+    def make(i: int) -> bytes:
+        return encode_tar(
+            [
+                (
+                    f"doc{i}_{m}.txt",
+                    bytes(
+                        (7 * i + 13 * m + 31 * j) % 256
+                        for j in range(40 + (i + m) % 17)
+                    ),
+                )
+                for m in range(2 + i % 2)
+            ]
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                members = [
-                    (
-                        f"doc{i}_{m}.txt",
-                        bytes(
-                            (7 * i + 13 * m + 31 * j) % 256
-                            for j in range(40 + (i + m) % 17)
-                        ),
-                    )
-                    for m in range(2 + i % 2)
-                ]
-                rows.append((i, encode_tar(members)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def tar_extract_features(df: DataFrame) -> DataFrame:
     """REAL ustar unpack: verify every header checksum and magic,
     parse octal sizes, walk 512-byte blocks to the terminator; emit
     exact member counts, byte totals, the payload byte sum and the
-    member-order-weighted ordered_sum. Malformed → ok=false."""
+    member-order-weighted ordered_sum."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.tar_codec import (
-            decode_tar,
+    def feats(_i: int, raw: bytes) -> tuple:
+        bodies = [p for _n, p in decode_tar(raw)]
+        return (
+            len(bodies),
+            len(raw),
+            sum(len(p) for p in bodies),
+            sum(sum(p) for p in bodies),
+            sum((m + 1) * sum(p) for m, p in enumerate(bodies)),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    members = decode_tar(raw)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(members),
-                            len(raw),
-                            sum(len(p) for _n, p in members),
-                            sum(sum(p) for _n, p in members),
-                            sum(
-                                (m + 1) * sum(p)
-                                for m, (_n, p) in enumerate(members)
-                            ),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_members",
-                    "archive_bytes",
-                    "total_payload_bytes",
-                    "payload_byte_sum",
-                    "ordered_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, TAR_FEATURE_SCHEMA
-    )
+    return _decode_map(df, TAR_FEATURE_SCHEMA, feats)
 
 
 WARC_FEATURE_SCHEMA = (
@@ -2281,49 +1336,30 @@ def attach_warc_payload(df: DataFrame, id_col: str) -> DataFrame:
     per record, the Common Crawl layout — even ids stay plain, so
     both intake paths hold a driver witness."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        recs = [
+            {
+                "type": "warcinfo",
+                "uri": None,
+                "record_id": f"w{i}",
+                "payload": b"software: shippai-etl-spark/11",
+            }
+        ]
+        for m in range(2 + i % 2):
+            body = WARC_TRAP + bytes(
+                97 + (7 * i + 13 * m + j) % 26 for j in range(30 + (i + m) % 11)
+            )
+            recs.append(
+                {
+                    "type": "response",
+                    "uri": f"http://example.com/{i}/{m}",
+                    "record_id": f"r{i}-{m}",
+                    "payload": http_response(404 if (i + m) % 5 == 0 else 200, body),
+                }
+            )
+        return (encode_warc_gzip if i % 2 else encode_warc)(recs)
 
-        from shippai_knowledge_etl_spark.operators.warc_codec import (
-            encode_warc,
-            encode_warc_gzip,
-            http_response,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                recs = [
-                    {
-                        "type": "warcinfo",
-                        "uri": None,
-                        "record_id": f"w{i}",
-                        "payload": b"software: shippai-etl-spark/11",
-                    }
-                ]
-                for m in range(2 + i % 2):
-                    body = WARC_TRAP + bytes(
-                        97 + (7 * i + 13 * m + j) % 26
-                        for j in range(30 + (i + m) % 11)
-                    )
-                    recs.append(
-                        {
-                            "type": "response",
-                            "uri": f"http://example.com/{i}/{m}",
-                            "record_id": f"r{i}-{m}",
-                            "payload": http_response(
-                                404 if (i + m) % 5 == 0 else 200, body
-                            ),
-                        }
-                    )
-                enc = encode_warc_gzip if i % 2 else encode_warc
-                rows.append((i, enc(recs)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def warc_parse_features(df: DataFrame) -> DataFrame:
@@ -2334,57 +1370,20 @@ def warc_parse_features(df: DataFrame) -> DataFrame:
     are walked member by member and n_gz_members pins the per-record
     framing contract (== n_records for .warc.gz, 0 for plain)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.warc_codec import (
-            decode_warc_auto,
+    def feats(_i: int, raw: bytes) -> tuple:
+        recs, n_gz = decode_warc_auto(raw)
+        resp = [r for r in recs if r["type"] == "response"]
+        return (
+            len(recs),
+            len(resp),
+            sum(r["status"] for r in resp),
+            sum((m + 1) * r["status"] for m, r in enumerate(resp)),
+            sum(len(r["body"]) for r in resp),
+            sum(sum(r["body"]) for r in resp),
+            n_gz,
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs, n_gz = decode_warc_auto(bytes(payload))
-                    resp = [r for r in recs if r["type"] == "response"]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(recs),
-                            len(resp),
-                            sum(r["status"] for r in resp),
-                            sum(
-                                (m + 1) * r["status"]
-                                for m, r in enumerate(resp)
-                            ),
-                            sum(len(r["body"]) for r in resp),
-                            sum(sum(r["body"]) for r in resp),
-                            n_gz,
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id),) + (None,) * 7 + (False,)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_records",
-                    "n_responses",
-                    "status_sum",
-                    "ordered_status",
-                    "body_bytes",
-                    "body_byte_sum",
-                    "n_gz_members",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, WARC_FEATURE_SCHEMA
-    )
+    return _decode_map(df, WARC_FEATURE_SCHEMA, feats)
 
 
 ZIP_FEATURE_SCHEMA = (
@@ -2403,88 +1402,42 @@ def attach_zip_payload(df: DataFrame, id_col: str) -> DataFrame:
     gated sums are all over the INFLATED bytes, so a wrong inflate
     cannot reproduce them OR the stored CRCs."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        ms = range(2 + i % 2)
+        members = [
+            (
+                f"f{i}_{m}.bin",
+                bytes(
+                    (i * 2654435761 + 97 * m + 131 * j) % 256
+                    for j in range(24 + (i + m) % 9)
+                ),
+            )
+            for m in ms
+        ]
+        return encode_zip(members, [8 if (i + m) % 2 else 0 for m in ms])
 
-        from shippai_knowledge_etl_spark.operators.zip_codec import (
-            encode_zip,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                members = [
-                    (
-                        f"f{i}_{m}.bin",
-                        bytes(
-                            (i * 2654435761 + 97 * m + 131 * j) % 256
-                            for j in range(24 + (i + m) % 9)
-                        ),
-                    )
-                    for m in range(2 + i % 2)
-                ]
-                methods = [8 if (i + m) % 2 else 0
-                           for m in range(2 + i % 2)]
-                rows.append((i, encode_zip(members, methods)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, make)
 
 
 def zip_extract_features(df: DataFrame) -> DataFrame:
     """REAL zip walk: end-of-central-directory → central directory →
     local headers, every member's CRC-32 recomputed from its bytes
-    and verified against the stored value (mismatch → the whole row
-    goes ok=false); crc_sum carries the actual CRC values to the
-    gate, where the oracle re-derives them bit-for-bit from the
-    polynomial via a recursive CTE."""
+    and verified against the stored value (a mismatch fails the whole
+    row); crc_sum carries the actual CRC values to the gate, where the
+    oracle re-derives them bit-for-bit from the polynomial via a
+    recursive CTE."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.zip_codec import (
-            decode_zip,
+    def feats(_i: int, raw: bytes) -> tuple:
+        members = decode_zip(raw)
+        return (
+            len(members),
+            sum(len(p) for _n, p, _c, _m in members),
+            sum(sum(p) for _n, p, _c, _m in members),
+            sum(c for _n, _p, c, _m in members),
+            sum(1 for _n, _p, _c, m in members if m == 8),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    members = decode_zip(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(members),
-                            sum(len(p) for _n, p, _c, _m in members),
-                            sum(sum(p) for _n, p, _c, _m in members),
-                            sum(c for _n, _p, c, _m in members),
-                            sum(1 for _n, _p, _c, m in members if m == 8),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_members",
-                    "total_bytes",
-                    "payload_byte_sum",
-                    "crc_sum",
-                    "n_deflated",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, ZIP_FEATURE_SCHEMA
-    )
+    return _decode_map(df, ZIP_FEATURE_SCHEMA, feats)
 
 
 PDFTEXT_FEATURE_SCHEMA = (
@@ -2503,41 +1456,71 @@ def attach_pdf_payload(df: DataFrame, id_col: str) -> DataFrame:
     chars chr(0x3042 + (id+p+m+j)%60) that forces the /F2 UTF-16BE
     hex path — the CID encoding real Japanese PDFs use."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> bytes:
+        pages = []
+        for p in range(1 + i % 2):
+            ops = []
+            for m in range(2 + (i + p) % 2):
+                cjk = "".join(
+                    chr(0x3042 + (i + p + m + j) % 60) for j in range(5 + (i + m) % 4)
+                )
+                latin = f"doc({i})-{p}-{m}\\end"
+                ops.append({"op": "text", "x": 100, "y": 200 + 30 * m, "label": latin})
+                ops.append({"op": "text", "x": 100, "y": 900 + 30 * m, "label": cjk})
+            pages.append({"ops": ops, "w": 2100.0, "h": 2970.0})
+        return pdf_document(pages)
 
-        from shippai_knowledge_etl_spark.sources.pdf_writer import (
-            pdf_document,
+    return _attach(df, id_col, make)
+
+
+def _adversarial_pdf(i: int) -> bytes:
+    """The hand-rolled PDF of :func:`attach_pdf_flate_payload`."""
+    npages = 1 + i % 2
+    objs: dict[int, bytes] = {}
+    for p in range(npages):
+        parts = [b"BT /F1 12 Tf "]
+        for m in range(2 + (i + p) % 2):
+            parts.append(
+                b"/F1 12 Tf [(d%d\\() -%d (p%d) -%d (\\)%d)] TJ "
+                % (i, 10 + m, p, 11 + m, m)
+            )
+            cjk = "".join(
+                chr(0x3042 + (i + 2 * p + 3 * m + j) % 60)
+                for j in range(4 + (i + m) % 3)
+            )
+            hexs = cjk.encode("utf-16-be").hex().encode()
+            parts.append(b"/F2 14 Tf <" + hexs + b"> Tj ")
+        parts.append(b"ET")
+        comp = zlib.compress(b"".join(parts), 9)
+        objs[10 + p] = (
+            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(comp)
+            + comp
+            + b"\nendstream"
         )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                pages = []
-                for p in range(1 + i % 2):
-                    ops = []
-                    for m in range(2 + (i + p) % 2):
-                        latin = f"doc({i})-{p}-{m}\\end"
-                        cjk = "".join(
-                            chr(0x3042 + (i + p + m + j) % 60)
-                            for j in range(5 + (i + m) % 4)
-                        )
-                        ops.append(
-                            {"op": "text", "x": 100, "y": 200 + 30 * m,
-                             "label": latin}
-                        )
-                        ops.append(
-                            {"op": "text", "x": 100, "y": 900 + 30 * m,
-                             "label": cjk}
-                        )
-                    pages.append({"ops": ops, "w": 2100.0, "h": 2970.0})
-                rows.append((i, pdf_document(pages)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
+        objs[3 + p] = b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>" % (10 + p)
+    kids = b" ".join(b"%d 0 R" % (3 + p) for p in range(npages))
+    objs[2] = b"<< /Type /Pages /Kids [ " + kids + b" ] /Count %d >>" % npages
+    objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
+    out = bytearray(b"%PDF-1.5\n%\xe2\xe3\xcf\xd3\n")
+    offsets: dict[int, int] = {}
+    # physical order scrambled: content streams first, structure LAST —
+    # the xref is the only valid map
+    for oid in sorted(objs, reverse=True):
+        offsets[oid] = len(out)
+        out += b"%d 0 obj\n" % oid + objs[oid] + b"\nendobj\n"
+    xref_at = len(out)
+    maxid = max(objs)
+    out += b"xref\n0 %d\n" % (maxid + 1)
+    for oid in range(maxid + 1):
+        if oid in offsets:
+            out += b"%010d 00000 n \n" % offsets[oid]
+        else:
+            out += b"0000000000 65535 f \n"
+    out += (
+        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n"
+        b"%%%%EOF\n" % (maxid + 1, xref_at)
     )
+    return bytes(out)
 
 
 def attach_pdf_flate_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -2553,73 +1536,7 @@ def attach_pdf_flate_payload(df: DataFrame, id_col: str) -> DataFrame:
     is scrambled relative to the xref (content first, catalog last) —
     so only a parser that trusts the xref, inflates the framed bytes
     and understands TJ semantics reproduces the sums."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import zlib
-
-        import pandas as pd
-
-        def build_pdf(i: int) -> bytes:
-            npages = 1 + i % 2
-            objs: dict[int, bytes] = {}
-            for p in range(npages):
-                parts = [b"BT /F1 12 Tf "]
-                for m in range(2 + (i + p) % 2):
-                    parts.append(b"/F1 12 Tf [(d%d\\() -%d (p%d) -%d (\\)%d)] TJ "
-                                 % (i, 10 + m, p, 11 + m, m))
-                    cjk = "".join(
-                        chr(0x3042 + (i + 2 * p + 3 * m + j) % 60)
-                        for j in range(4 + (i + m) % 3)
-                    )
-                    hexs = cjk.encode("utf-16-be").hex().encode()
-                    parts.append(b"/F2 14 Tf <" + hexs + b"> Tj ")
-                parts.append(b"ET")
-                content = b"".join(parts)
-                comp = zlib.compress(content, 9)
-                objs[10 + p] = (
-                    b"<< /Length %d /Filter /FlateDecode >>\nstream\n"
-                    % len(comp) + comp + b"\nendstream"
-                )
-                objs[3 + p] = (
-                    b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>"
-                    % (10 + p)
-                )
-            kids = b" ".join(b"%d 0 R" % (3 + p) for p in range(npages))
-            objs[2] = (
-                b"<< /Type /Pages /Kids [ " + kids + b" ] /Count %d >>"
-                % npages
-            )
-            objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-            out = bytearray(b"%PDF-1.5\n%\xe2\xe3\xcf\xd3\n")
-            offsets: dict[int, int] = {}
-            # physical order scrambled: content streams first,
-            # structure LAST — the xref is the only valid map
-            for oid in sorted(objs, reverse=True):
-                offsets[oid] = len(out)
-                out += b"%d 0 obj\n" % oid + objs[oid] + b"\nendobj\n"
-            xref_at = len(out)
-            maxid = max(objs)
-            out += b"xref\n0 %d\n" % (maxid + 1)
-            for oid in range(maxid + 1):
-                if oid in offsets:
-                    out += b"%010d 00000 n \n" % offsets[oid]
-                else:
-                    out += b"0000000000 65535 f \n"
-            out += (
-                b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n"
-                b"%%%%EOF\n" % (maxid + 1, xref_at)
-            )
-            return bytes(out)
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                rows.append((int(doc_id), build_pdf(int(doc_id))))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _attach(df, id_col, _adversarial_pdf)
 
 
 def pdf_text_features(df: DataFrame) -> DataFrame:
@@ -2628,59 +1545,27 @@ def pdf_text_features(df: DataFrame) -> DataFrame:
     literals, UTF-16BE on /F2 hex strings); emits codepoint sums split
     by script plus a page/op/script-position-weighted ordered sum —
     wrong escape handling, a swapped font state, or out-of-order pages
-    all shift a sum. Malformed payloads → ok=false.
+    all shift a sum.
 
-    Scale shape: one narrow Arrow map, no shuffle — the mm_png_decode
-    class; six integers per document return to the JVM. At 100 TB
-    this is the document-corpus text-extraction pass."""
+    Scale shape: the mm_png_decode class; six integers per document
+    return to the JVM. At 100 TB this is the document-corpus
+    text-extraction pass."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(_i: int, raw: bytes) -> tuple:
+        pages = extract_pdf_text(raw)
+        latin = cjk = ordered = 0
+        for p, texts in enumerate(pages):
+            for k, s in enumerate(texts):
+                cp = sum(ord(ch) for ch in s)
+                m, which = divmod(k, 2)
+                if which == 0:
+                    latin += cp
+                else:
+                    cjk += cp
+                ordered += cp * (p * 1000 + m * 10 + which + 1)
+        return len(pages), sum(len(p) for p in pages), latin, cjk, ordered
 
-        from shippai_knowledge_etl_spark.sources.pdf_reader import (
-            extract_pdf_text,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    pages = extract_pdf_text(bytes(payload))
-                    n_str = sum(len(p) for p in pages)
-                    latin = cjk = ordered = 0
-                    for p, texts in enumerate(pages):
-                        for k, s in enumerate(texts):
-                            cp = sum(ord(ch) for ch in s)
-                            m, which = divmod(k, 2)
-                            if which == 0:
-                                latin += cp
-                            else:
-                                cjk += cp
-                            ordered += cp * (p * 1000 + m * 10 + which + 1)
-                    rows.append(
-                        (int(doc_id), len(pages), n_str, latin, cjk,
-                         ordered, True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_pages",
-                    "n_strings",
-                    "latin_cp_sum",
-                    "cjk_cp_sum",
-                    "ordered_cp",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PDFTEXT_FEATURE_SCHEMA
-    )
+    return _decode_map(df, PDFTEXT_FEATURE_SCHEMA, feats)
 
 
 def attach_alaw_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -2690,28 +1575,8 @@ def attach_alaw_payload(df: DataFrame, id_col: str) -> DataFrame:
     companded through the real A-law encoder (byte-equal to stdlib
     audioop over the full 16-bit range, tests/test_multimodal.py)
     into a format-tag-6 container."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            encode_wav_alaw,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = 64 + 2 * (i % 32)
-                samples = [
-                    ((i * 2654435761 + k * 40503) % 65536) - 32768
-                    for k in range(n)
-                ]
-                rows.append((i, encode_wav_alaw(samples, 8000)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
+    return _attach(
+        df, id_col, lambda i: encode_wav_alaw(_lcg_pcm16(i, 64 + 2 * (i % 32)), 8000)
     )
 
 
@@ -2719,42 +1584,9 @@ def wav_alaw_features(df: DataFrame) -> DataFrame:
     """REAL A-law decode + quantization-error profile against the
     regenerated original — the mm_wav_mulaw shape on format tag 6."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def feats(i: int, raw: bytes) -> tuple:
+        _rate, _ch, _bits, dec = decode_wav(raw)
+        errs = [abs(a - b) for a, b in zip(_lcg_pcm16(i, len(dec)), dec)]
+        return len(dec), sum(dec), sum(errs), max(errs)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            decode_wav,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    i = int(doc_id)
-                    _rate, _ch, _bits, dec = decode_wav(bytes(payload))
-                    n = len(dec)
-                    orig = [
-                        ((i * 2654435761 + k * 40503) % 65536) - 32768
-                        for k in range(n)
-                    ]
-                    errs = [abs(a - b) for a, b in zip(orig, dec)]
-                    rows.append(
-                        (i, n, sum(dec), sum(errs), max(errs), True)
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 4 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "sum_expanded",
-                    "sum_abs_err",
-                    "max_abs_err",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, MULAW_FEATURE_SCHEMA
-    )
+    return _decode_map(df, MULAW_FEATURE_SCHEMA, feats)

@@ -266,7 +266,7 @@ def mm_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     payloads = multimodal.attach_payload(d, "doc_id", "text")
-    e = multimodal.audio_energy_frames(payloads, frame_bytes=256)
+    e = multimodal.audio_energy_frames(payloads)
     sp = e.filter(F.col("energy") > _VAD_THRESHOLD)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     isl = sp.withColumn(

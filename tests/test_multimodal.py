@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_resize_images_exact_pixels(spark):
@@ -25,19 +26,6 @@ def test_resize_images_exact_pixels(spark):
     assert bytes(out["pixels"]) == expected
     assert out["pixel_md5"] == hashlib.md5(expected).hexdigest()
     assert out["ok"]
-
-
-def test_resize_images_real_decoder_raises(spark):
-    import pytest as _pytest
-
-    from shippai_knowledge_etl_spark.operators import multimodal as M
-
-    df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    with _pytest.raises(Exception):
-        M.resize_images(
-            M.attach_payload(df, "doc_id", "text"), 8, 8,
-            use_real_decoder=True,
-        ).collect()
 
 
 def test_resize_images_empty_payload_zero_grid(spark):
@@ -337,6 +325,18 @@ def test_wav_codec_chunk_skip_and_extensible():
     assert (rate, out) == (22050, [7, -7, 70])
 
 
+def wav_with_fmt(fmt: bytes) -> bytes:
+    """A RIFF/WAVE file with the given fmt chunk and 2 data bytes."""
+    import struct
+
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", 2) + b"\x00\x00"
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def test_wav_codec_scope_errors():
     """Out-of-scope formats raise loudly (no silent fake): IEEE float
     tag, 24-bit depth, non-PCM extensible GUID, junk bytes, and
@@ -349,14 +349,6 @@ def test_wav_codec_scope_errors():
         decode_wav,
         encode_wav,
     )
-
-    def wav_with_fmt(fmt: bytes) -> bytes:
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", 2) + b"\x00\x00"
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
 
     with pytest.raises(NotImplementedError, match="tag 3"):
         decode_wav(wav_with_fmt(struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)))
@@ -379,13 +371,14 @@ def test_wav_codec_scope_errors():
 def test_wav_decode_features_real_path(spark):
     """Spark-side end-to-end on a tiny frame: attach real WAV payloads,
     decode with the stdlib codec, check the integer stats against a
-    direct Python recomputation of the generator."""
+    direct Python recomputation of the generator. The id column may
+    have any name; the payload frame always calls it doc_id."""
     from shippai_knowledge_etl_spark.operators import multimodal
 
-    df = spark.range(0, 6).withColumnRenamed("id", "doc_id")
+    df = spark.range(0, 6)
     out = (
         multimodal.wav_decode_features(
-            multimodal.attach_wav_payload(df, "doc_id")
+            multimodal.attach_wav_payload(df, "id")
         )
         .orderBy("doc_id")
         .collect()
@@ -403,6 +396,116 @@ def test_wav_decode_features_real_path(spark):
         assert r["n_frames"] == n // ch
         assert r["sum_samples"] == sum(samples)
         assert r["sum_squares"] == sum(s * s for s in samples)
+
+
+def test_wav_decode_features_missing_codec_is_loud(spark):
+    """Row contract through the DataFrame path: a 24-bit PCM payload
+    needs a codec this repo does not have, so the query fails loudly
+    instead of reading as ok=false; a truncated copy of a valid WAV is
+    a data error and stays one ok=false row."""
+    import struct
+
+    from shippai_knowledge_etl_spark.operators import multimodal as M
+    from shippai_knowledge_etl_spark.operators.wav_codec import encode_wav
+
+    pcm24 = wav_with_fmt(struct.pack("<HHIIHH", 1, 1, 8000, 24000, 3, 24))
+    df = spark.createDataFrame([(1, pcm24)], "doc_id long, payload binary")
+    with pytest.raises(Exception, match="24-bit"):
+        M.wav_decode_features(df).collect()
+
+    # cut inside the data chunk header (bytes 36-44 of the header)
+    valid = encode_wav(list(range(-40, 40)), 8000)
+    df = spark.createDataFrame([(2, valid[:40])], "doc_id long, payload binary")
+    rows = M.wav_decode_features(df).collect()
+    assert len(rows) == 1 and rows[0]["ok"] is False
+    assert rows[0]["sample_rate"] is None and rows[0]["sum_samples"] is None
+
+
+# Every codec-backed decoder (name, kwargs, payload columns).
+_CODEC_DECODERS = [
+    ("decode_image_features", {"use_real_decoder": True}, ("payload",)),
+    ("png_decode_features", {}, ("payload",)),
+    ("wav_decode_features", {}, ("payload",)),
+    ("wav_vad_features", {}, ("payload",)),
+    ("png_downsample_features", {}, ("payload",)),
+    ("gif_decode_features", {}, ("payload",)),
+    ("wav_mulaw_features", {}, ("payload",)),
+    ("bmp_decode_features", {}, ("payload",)),
+    ("png_tile_signatures", {}, ("payload",)),
+    ("wav_resample_features", {}, ("payload",)),
+    ("avi_decode_features", {}, ("payload",)),
+    ("png16_decode_features", {}, ("payload",)),
+    ("jpeg_decode_features", {}, ("payload",)),
+    ("jpeg_progressive_features", {}, ("flat_prog", "acb_base", "acb_prog")),
+    ("adpcm_decode_features", {}, ("payload",)),
+    ("tiff_decode_features", {}, ("payload",)),
+    ("mjpeg_decode_features", {}, ("payload",)),
+    ("tar_extract_features", {}, ("payload",)),
+    ("warc_parse_features", {}, ("payload",)),
+    ("zip_extract_features", {}, ("payload",)),
+    ("pdf_text_features", {}, ("payload",)),
+    ("wav_alaw_features", {}, ("payload",)),
+]
+
+# The fake-decode operators accept any bytes by design.
+_FAKE_DECODERS = [
+    ("decode_image_features", {}),
+    ("decode_audio_features", {}),
+    ("resize_images", {"target_w": 4, "target_h": 4}),
+    ("ahash_signatures", {}),
+]
+
+# Starts with the PNG signature so the real image path parses it as a
+# (truncated) PNG instead of rejecting the format as unsupported.
+_GARBAGE = b"\x89PNG\r\n\x1a\n" + b"not a media payload \xff\x00" * 3
+
+
+def _assert_failed_rows(out, ids):
+    rows = sorted(out.collect(), key=lambda r: r["doc_id"])
+    assert [r["doc_id"] for r in rows] == ids
+    for r in rows:
+        assert r["ok"] is False
+        assert all(r[c] is None for c in out.columns if c not in ("doc_id", "ok"))
+
+
+@pytest.mark.parametrize(
+    "name,kwargs,cols", _CODEC_DECODERS, ids=[d[0] for d in _CODEC_DECODERS]
+)
+def test_decoder_malformed_input_is_one_failed_row(spark, name, kwargs, cols):
+    """Row contract of every codec-backed decoder: a garbage payload
+    (doc 1) and a NULL payload (doc 2) each give exactly one row with
+    ok=false and every feature column NULL."""
+    from shippai_knowledge_etl_spark.operators import multimodal as M
+
+    df = spark.createDataFrame(
+        [(1, *[_GARBAGE] * len(cols)), (2, *[None] * len(cols))],
+        "doc_id long, " + ", ".join(f"{c} binary" for c in cols),
+    )
+    _assert_failed_rows(getattr(M, name)(df, **kwargs), [1, 2])
+
+
+@pytest.mark.parametrize(
+    "name,kwargs", _FAKE_DECODERS, ids=[d[0] for d in _FAKE_DECODERS]
+)
+def test_fake_decoder_null_payload_is_one_failed_row(spark, name, kwargs):
+    """The fake-decode operators accept any bytes, but a NULL payload
+    still gives one ok=false row with NULL features."""
+    from shippai_knowledge_etl_spark.operators import multimodal as M
+
+    df = spark.createDataFrame([(2, None)], "doc_id long, payload binary")
+    _assert_failed_rows(getattr(M, name)(df, **kwargs), [2])
+
+
+def test_multimodal_has_one_arrow_map_and_one_blanket_except():
+    """Regrowth guard: every operator in operators/multimodal.py goes
+    through the one per-row map and the one decoder error policy."""
+    from pathlib import Path
+
+    from shippai_knowledge_etl_spark.operators import multimodal as M
+
+    src = Path(M.__file__).read_text()
+    assert src.count("mapInPandas(") == 1
+    assert src.count("except Exception") == 1
 
 
 def test_mulaw_expand_matches_arithmetic_twin_full_range():

@@ -479,6 +479,15 @@ def test_topk_blas_plan_is_python_free_after_scoring(plans):
     assert "TakeOrderedAndProject" in phys, phys[:1500]
 
 
+@pytest.mark.parametrize("name", ["mm_jpeg_decode", "mm_png_decode", "mm_wav_decode"])
+def test_codec_queries_keep_encode_and_decode_maps(plans, name):
+    # one Arrow map synthesizes the payloads, a second decodes them;
+    # fusing the two into one map is a deliberate plan change that
+    # must update this count
+    _, phys = plans[name]
+    assert phys.count("MapInPandas") == 2, phys[:1500]
+
+
 def test_curation_model_probes_are_broadcast(plans):
     # the membership/model probes must never shuffle the corpus side:
     # decontaminate probes the eval-shingle set, the LM scorer probes
