@@ -42,10 +42,7 @@ import json
 import os
 import re
 import sys
-import time
 from pathlib import Path
-
-import pandas as pd
 
 REPO = str(Path(__file__).resolve().parent)
 if REPO not in sys.path:
@@ -82,51 +79,12 @@ PINNED_MEDIANS = {
 TRIAGE_BUDGET = 1.25
 
 
-def _timed_pass(names, spark, sf_dir):
-    """One full cold+2-rep measurement pass, sentinel-BRACKETED."""
-    from scripts.ext_common import contention_sentinel
-
-    pre = contention_sentinel(spark)
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    best: dict[str, float] = {}
-    median: dict[str, float] = {}
-    for name, fn in names.items():
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 4)
-        # Steady-state latency (codegen + JIT warmed): min of two
-        # post-cold runs. A single repeat occasionally lands on a JIT
-        # compile-queue stall (all 32 cores busy → C2 starved → the
-        # whole single-wave stage runs interpreted, 5-10x slower), which
-        # says nothing about the plan; min-of-2 filters that tail.
-        reps = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            reps.append(time.perf_counter() - t0)
-        warm[name] = round(min(reps), 4)
-        best[name] = round(min([timings[name], *reps]), 4)
-        median[name] = round(sorted([timings[name], *reps])[1], 4)
-    post = contention_sentinel(spark)
-    unstable = pre["unstable"] or post["unstable"]
-    return {
-        "timings": timings,
-        "warm": warm,
-        "best": best,
-        "median": median,
-        "sentinel_pre_sec": pre["sentinel_sec"],
-        "sentinel_post_sec": post["sentinel_sec"],
-        "sentinel_pin_sec": pre["sentinel_pin_sec"],
-        "unstable": unstable,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
+    from scripts.ext_common import timed_loop, warm_session
     from shippai_knowledge_etl_spark.catalog import bench_queries
     from shippai_knowledge_etl_spark.session import get_spark
 
@@ -134,24 +92,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     names = bench_queries()
-    # Warm the JVM + parquet footers once so per-query numbers measure
-    # the query, not session startup.
-    next(iter(names.values()))(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # Also spin up the Python/Arrow workers (one per core): the first
-    # pandas-UDF query would otherwise absorb ~2s of worker fork/init
-    # that is session startup, not query cost.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(v: pd.Series) -> pd.Series:
-        return v
-
-    par = spark.sparkContext.defaultParallelism
-    spark.range(par * 4).repartition(par).select(_warm("id")).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_session(spark, sf_dir)
 
     # Bracketed-sentinel protocol (module docstring): one re-run if the
     # first pass's bracket trips — a mid-run contention window ends as
@@ -161,7 +102,7 @@ def main() -> None:
     attempts = 0
     while True:
         attempts += 1
-        res = _timed_pass(names, spark, sf_dir)
+        res = timed_loop(spark, sf_dir, names)
         if not res["unstable"] or attempts >= 2:
             break
         print(
@@ -172,7 +113,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    timings = res["timings"]
+    timings = res["cold"]
     median = res["median"]
     total = round(sum(timings.values()), 4)
     # Threshold-driven triage (VERDICT r10 wrong #1): every headline
@@ -203,14 +144,16 @@ def main() -> None:
         if parts:
             triage[name] = "; ".join(parts)
 
+    best = {n: min(timings[n], res["warm"][n]) for n in timings}
     detail = {
         "queries_cold": timings,
         "queries_warm": res["warm"],
         "warm_total_sec": round(sum(res["warm"].values()), 4),
-        "queries_best": res["best"],
-        "best_total_sec": round(sum(res["best"].values()), 4),
+        "queries_best": best,
+        "best_total_sec": round(sum(best.values()), 4),
         "triage": triage,
         "attempts": attempts,
+        "cpus": res["cpus"],
     }
     Path(REPO, "BENCH_DETAIL.json").write_text(json.dumps(detail, indent=1))
     print("# detail sidecar: BENCH_DETAIL.json", file=sys.stderr)

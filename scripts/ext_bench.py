@@ -1,76 +1,102 @@
-"""Timing harness for the [EXT] LLM-pipeline surface (separate from
-bench.py, whose headline set is pinned for round-over-round
-comparison). Runs each EXT flagship once warm and prints ONE JSON
-line. Usage:
+"""The EXT set CLI: time pinned EXT sets or named catalog queries at
+$SPARK_GRAFT_SF_DIR with the shared loop of ``scripts/ext_common.py``
+(session warm-up, cold + 2 reps through the noop sink, sentinel
+bracket) and print ONE JSON line per group. Usage:
 
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/ext_bench.py
+    python scripts/ext_bench.py ext7
+    python scripts/ext_bench.py ext ext2
+    python scripts/ext_bench.py --plans DIR graph_sssp mm_jpeg_decode
 
-Reference numbers (sf0.1, local[32], first execution per query so
-per-query Janino codegen is included, 2026-08): total ~55s — bm25
-~5.8s, bm25_batch ~6.5s, chunking ~0.6s, hamming ~2.3s, hybrid
-~3.3s, eval_recall ~4.4s, mmr ~1.5s, rag e2e ~7.0s, bpe_train
-~3.2s, bpe_encode ~5.7s, cluster_balance ~4.5s, main_content ~6.7s
-(150k pages through the Python parse edge), length_batches /
-outliers / negative_pairs / hard_negatives / profile all <1s. None
-scale worse than linearly in rows; the multi-second constants are
-codegen + AQE rounds + (for bpe/kmeans) driver iteration probes,
-all of which amortize at real scale."""
+Each set name (``ext``, ``ext2`` … ``ext8``; see ``EXT_SETS``) is one
+group reported as ``<set>_queries_total_sec``; query names given
+directly are timed together as ``adhoc_queries_total_sec``. With no
+argument the ``ext`` set runs. ``--plans DIR`` also writes each
+query's ``explain("formatted")`` to ``DIR/<name>.txt`` and adds its
+plan-shape counters to the line (``plan_counters``), so before/after
+plan diffs are one grep. bench.py stays the headline timer; this CLI
+never writes BENCH*.json.
+"""
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
+import re
 import sys
+from collections import Counter
+from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# PINNED as of round 6 — the EXT surface's round-over-round regression
-# telemetry, the same convention as bench.py's headline set: never add
-# to or remove from this tuple (new operators get timed ad hoc, not
-# here). One representative per EXT family: retrieval (dense, batch,
-# index-free chunking, Hamming, hybrid, eval, MMR, RAG e2e),
-# incremental near-dup probe, tokenizer (train+encode), graph, and the
-# curation flagships (DSIR, cluster balance, main content, length
-# batching, outliers, negatives ×2, profile).
-EXT_SET = (
-    "ext_bm25_topk",
-    "ext_bm25_batch",
-    "ext_chunk_overlap",
-    "simsearch_hamming_topk",
-    "retrieval_hybrid",
-    "retrieval_eval_recall",
-    "retrieval_mmr",
-    "retrieval_pipeline_e2e",
-    "dedup_incremental",
-    "graph_pagerank",
-    "curation_dsir_weights",
-    "ext_bpe_train",
-    "ext_bpe_encode",
-    "curation_cluster_balance",
-    "curation_main_content",
-    "curation_length_batches",
-    "curation_quality_outliers",
-    "curation_negative_pairs",
-    "simsearch_hard_negatives",
-    "ext_table_profile",
-)
+
+def plan_counters(plan: str) -> dict[str, int]:
+    """Operator counts of a formatted plan, read from its tree section
+    (each node once, e.g. ``{"MapInPandas": 2, "Exchange": 1}``); the
+    numbered detail section below it names every node a second time."""
+    tree = plan.split("\n\n")[0]
+    names = re.findall(r"(\w[\w ]*?) *\(\d+\)$", tree, re.MULTILINE)
+    return dict(Counter(names))
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from scripts.ext_common import run_set
-    from shippai_knowledge_etl_spark.catalog import load_catalog
+    from scripts.ext_common import EXT_SETS, timed_loop, warm_session
+    from shippai_knowledge_etl_spark.catalog import queries
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", default=["ext"], help="set or query names")
+    ap.add_argument("--plans", help="write each query's formatted plan here")
+    args = ap.parse_args()
+
+    q = queries()
+    groups: dict[str, list[str]] = {}
+    for arg in args.names:
+        if arg in EXT_SETS:
+            groups[arg] = list(EXT_SETS[arg])
+        elif arg in q:
+            groups.setdefault("adhoc", []).append(arg)
+        else:
+            print(f"unknown set or query: {arg}", file=sys.stderr)
+            return 2
+
     from shippai_knowledge_etl_spark.session import get_spark
 
     spark = get_spark("ext-bench")
-    cat = load_catalog()
-    # warm the JVM + Arrow workers so timings measure the queries
-    cat["a1_status_summary"].fn(spark, sf_dir).collect()
-
-    # Protocol change round 9 (VERDICT r8 item 1): cold + 2 in-session
-    # reps per query; `queries` stays the cold numbers (comparable with
-    # r6-r8), `queries_median` is the cross-round statistic. The SET is
-    # unchanged — protocol, not queries.
-    return run_set(cat, spark, sf_dir, EXT_SET, "ext_queries_total_sec")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm_session(spark, sf_dir)
+    for group, names in groups.items():
+        res = timed_loop(spark, sf_dir, {n: q[n] for n in names})
+        line = {
+            "metric": f"{group}_queries_total_sec",
+            "value": round(sum(res["cold"].values()), 4),
+            "unit": "sec",
+            "queries": res["cold"],
+            "queries_warm": res["warm"],
+            "warm_total_sec": round(sum(res["warm"].values()), 4),
+            "queries_median": res["median"],
+            "median_total_sec": round(sum(res["median"].values()), 4),
+            "sentinel_pre_sec": res["sentinel_pre_sec"],
+            "sentinel_post_sec": res["sentinel_post_sec"],
+            "sentinel_pin_sec": res["sentinel_pin_sec"],
+            "unstable": res["unstable"],
+            "sf": sf_dir,
+            "cpus": res["cpus"],
+        }
+        if args.plans:
+            pdir = Path(args.plans)
+            pdir.mkdir(parents=True, exist_ok=True)
+            line["plan_counters"] = {}
+            for name in names:
+                df = q[name](spark, sf_dir)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                (pdir / f"{name}.txt").write_text(plan)
+                line["plan_counters"][name] = plan_counters(plan)
+        print(json.dumps(line), flush=True)
+    spark.stop()
+    return 0
 
 
 if __name__ == "__main__":

@@ -43,7 +43,6 @@ def pagerank(
     edges: DataFrame,
     n_iters: int = 3,
     damping_pct: int = 85,
-    checkpoint_every: int = 1,
     *,
     n_nodes: int,
 ) -> DataFrame:
@@ -61,8 +60,8 @@ def pagerank(
 
     Scale: state is 2 longs per node; edges never materialize
     anything wider than (dst, contrib) into the shuffle. localCheckpoint
-    every ``checkpoint_every`` rounds keeps lineage O(1) like the CC
-    operators; convergence beyond ``n_iters`` is the caller's loop.
+    every round keeps lineage O(1) like the CC operators; convergence
+    beyond ``n_iters`` is the caller's loop.
     """
     edges = edges.filter(F.col("src") != F.col("dst"))
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -99,10 +98,7 @@ def pagerank(
 
     # eager final checkpoint: materializes the state (and any pending
     # lazy checkpoints) so the cached edge list can be released now
-    ranks, _, _ = iterate(
-        ranks, step, n_iters,
-        checkpoint_every=checkpoint_every, eager_final=True,
-    )
+    ranks, _, _ = iterate(ranks, step, n_iters, eager_final=True)
     deg_edges.unpersist()
     return ranks
 
@@ -188,7 +184,6 @@ def label_propagation(
     nodes: DataFrame,
     edges: DataFrame,
     n_iters: int = 3,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Semi-supervised label propagation (Zhu & Ghahramani 2002 /
     Raghavan et al. 2007, clamped-seed variant) over (``nodes``: cols
@@ -212,9 +207,8 @@ def label_propagation(
     node; the vote is one (dst, label)-keyed shuffle whose counts
     partial-aggregate map-side, followed by a dst-keyed argmin that
     AQE serves from the same partitioning; the full-universe left join
-    keeps isolated nodes. ``localCheckpoint`` every
-    ``checkpoint_every`` rounds truncates lineage exactly like
-    ``pagerank`` / ``dedup.connected_components``.
+    keeps isolated nodes. ``localCheckpoint`` every round truncates
+    lineage exactly like ``pagerank`` / ``dedup.connected_components``.
     """
     edges = edges.filter(F.col("src") != F.col("dst")).persist()
 
@@ -248,8 +242,7 @@ def label_propagation(
         )
 
     state, _, _ = iterate(
-        nodes.select("id", "label", "is_seed"), step, n_iters,
-        checkpoint_every=checkpoint_every, eager_final=True,
+        nodes.select("id", "label", "is_seed"), step, n_iters, eager_final=True
     )
     edges.unpersist()
     return state
@@ -262,7 +255,6 @@ def hits(
     nodes: DataFrame,
     edges: DataFrame,
     n_iters: int = 2,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over (``nodes``: col
     ``id``; ``edges``: cols ``src``, ``dst``), returning
@@ -288,8 +280,8 @@ def hits(
 
     Scale shape: state is 3 longs per node; two key-keyed shuffles
     per round (dst then src), each partial-aggregated map-side; the
-    edge list is persisted once; ``localCheckpoint`` every
-    ``checkpoint_every`` rounds truncates lineage.
+    edge list is persisted once; ``localCheckpoint`` every round
+    truncates lineage.
     """
     edges = edges.filter(F.col("src") != F.col("dst")).persist()
 
@@ -346,7 +338,6 @@ def hits(
         ),
         step,
         n_iters,
-        checkpoint_every=checkpoint_every,
         eager_final=True,
     )
     edges.unpersist()
@@ -458,7 +449,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     n_iters: int = 3,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """``n_iters`` rounds of k-core peeling (Seidman 1983; the
     distributed peel loop is Montresor et al. 2013) over an undirected
@@ -499,10 +489,7 @@ def k_core(
         )
         return deg.filter(F.col("deg") >= k).select(F.col("a").alias("id"))
 
-    surv, _, _ = iterate(
-        nodes.select("id"), step, n_iters,
-        checkpoint_every=checkpoint_every,
-    )
+    surv, _, _ = iterate(nodes.select("id"), step, n_iters)
     final_deg = (
         adj.join(surv.withColumnRenamed("id", "a"), "a")
         .join(surv.withColumnRenamed("id", "b"), "b")
@@ -729,7 +716,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     n_iters: int = 3,
     damping_pct: int = 85,
-    checkpoint_every: int = 1,
     *,
     n_seeds: int,
 ) -> DataFrame:
@@ -788,10 +774,7 @@ def personalized_pagerank(
             .alias("rank_scaled"),
         )
 
-    ranks, _, _ = iterate(
-        ranks, step, n_iters,
-        checkpoint_every=checkpoint_every, eager_final=True,
-    )
+    ranks, _, _ = iterate(ranks, step, n_iters, eager_final=True)
     deg_edges.unpersist()
     return ranks
 
@@ -800,7 +783,6 @@ def multi_source_bfs(
     edges: DataFrame,
     seeds: DataFrame,
     n_rounds: int = 3,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Exact shortest-path distances from every seed, bounded at
     ``n_rounds`` hops, over the UNDIRECTED simple graph induced by
@@ -864,7 +846,6 @@ def multi_source_bfs(
         ),
         step,
         n_rounds,
-        checkpoint_every=checkpoint_every,
         eager_final=True,
     )
     adj.unpersist()
@@ -879,7 +860,6 @@ def shortest_paths(
     edges_w: DataFrame,
     seeds: DataFrame,
     n_rounds: int,
-    checkpoint_every: int = 1,
     converge: bool = True,
 ) -> tuple[DataFrame, int]:
     """Multi-source weighted shortest paths (Bellman-Ford relaxation,
@@ -991,7 +971,6 @@ def shortest_paths(
         state0,
         step,
         n_rounds,
-        checkpoint_every=checkpoint_every,
         eager_final=True,
         stop_when=frontier_empty if converge else None,
     )

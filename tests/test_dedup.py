@@ -200,9 +200,7 @@ def test_pagerank_mass_and_ordering(spark):
     )
     ranks = {
         r["id"]: r["rank_scaled"]
-        for r in pagerank(
-            nodes, edges, n_iters=10, checkpoint_every=2, n_nodes=n
-        ).collect()
+        for r in pagerank(nodes, edges, n_iters=10, n_nodes=n).collect()
     }
     assert len(ranks) == n
     hub = ranks[0]
@@ -239,9 +237,7 @@ def test_pagerank_until_converges_and_matches_fixed(spark):
     # a long fixed run lands within tolerance of the converged state
     fixed = {
         r["id"]: r["rank_scaled"]
-        for r in pagerank(
-            nodes, edges, n_iters=40, checkpoint_every=5, n_nodes=n
-        ).collect()
+        for r in pagerank(nodes, edges, n_iters=40, n_nodes=n).collect()
     }
     for k in conv:
         assert abs(conv[k] - fixed[k]) <= 2_000_000, (k, conv[k], fixed[k])
